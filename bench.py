@@ -28,150 +28,11 @@ from trafik_etl_modular_spark import get_spark  # noqa: E402
 from trafik_etl_modular_spark.registry import REGISTRY, _load_all  # noqa: E402
 
 
-def _write_local_artifact(
-    sf: float | None,
-    timings: dict[str, float],
-    errors: dict[str, str],
-    total: float,
-    n_reruns: int,
-    calib: dict[str, float] | None = None,
-    path: str | None = None,
-    cpus: str | None = None,
-) -> None:
-    """Persist the FULL per-query record to BENCH_LOCAL.json.
-
-    The driver keeps only the last 2000 chars of stdout, which at 131
-    queries preserves roughly the last 60 per-query timings — so
-    round-over-round regression analysis on the rest was impossible
-    from the repo alone.  This committed artifact carries every
-    per-query time plus the delta ratio vs the previous run at the
-    same scale factor (previous run's numbers are kept under "prev"
-    so one file is enough to rebuild the comparison table).
-    Best-effort: an unwritable repo dir must never fail the bench.
-    """
-    if path is None:
-        path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json")
-    try:
-        with open(path) as f:
-            doc = json.load(f)
-        if not isinstance(doc, dict):
-            doc = {}
-    except Exception:  # noqa: BLE001 — first run or corrupt file
-        doc = {}
-    # Keyed by scale factor AND core count when the caller passes one
-    # (VERDICT r12 item 8: the driver benches the same sf at two core
-    # counts back-to-back, and the 8-core run used to OVERWRITE the
-    # 32-core per-query map, destroying the round-over-round
-    # comparison).  Legacy "sf*" records remain readable as the prev
-    # baseline for the first keyed run.
-    base_key = f"sf{sf}" if sf is not None else "sf?"
-    key = f"{base_key}/c{cpus}" if cpus is not None else base_key
-    prev = doc.get(key) or doc.get(base_key)
-    notes = prev.get("notes") if isinstance(prev, dict) else None
-    record = {
-        "metric": "total_wall_sec_all_queries",
-        "sf": sf,
-        "n_queries": len(timings),
-        "n_reruns": n_reruns,
-        "unit": "sec",
-        "value": round(total, 3),
-        "queries": timings,
-    }
-    if calib:
-        # Machine-weather calibration: the same fixed single-thread CPU
-        # loop timed before and after the run.  This box shows
-        # multi-tenant bursts that inflate readings up to 20x; dividing
-        # a suspicious delta by (calib / prev calib) separates "code got
-        # slower" from "the machine was busy" without re-running.
-        record["calib"] = calib
-    if errors:
-        record["errors"] = errors
-    if notes:
-        # Human-written measurement verdicts (noise investigations etc.)
-        # survive re-runs.
-        record["notes"] = notes
-    if isinstance(prev, dict) and isinstance(prev.get("queries"), dict):
-        prev_q = prev["queries"]
-        record["prev"] = {
-            "value": prev.get("value"),
-            "n_queries": prev.get("n_queries"),
-            "queries": prev_q,
-        }
-        record["delta_ratio"] = {
-            n: round(t / prev_q[n], 3)
-            for n, t in timings.items()
-            if n in prev_q and prev_q[n] > 0
-        }
-    doc[key] = record
-    try:
-        with open(path, "w") as f:
-            json.dump(doc, f, indent=1, sort_keys=True)
-            f.write("\n")
-    except Exception:  # noqa: BLE001
-        pass
-    # Per-ROUND artifact with the complete per-query map (verdict r09
-    # ask #7): the driver's BENCH_rNN.json keeps only the tail of
-    # stdout, so at 200+ queries the official round record truncates
-    # the per-query dict and cross-round weather normalization had to
-    # lean on the working-tree BENCH_LOCAL.json.  The round number is
-    # derived from the newest correctness ledger (bench runs during
-    # round N, after ledger N-1 landed).  Best-effort, never fails the
-    # bench.
-    try:
-        import glob as _glob
-
-        # anchored to the BENCH_LOCAL.json directory so tests that
-        # redirect `path` to a tmp dir don't write round artifacts
-        # into the repo root
-        repo = os.path.dirname(os.path.abspath(path))
-        rounds = [
-            int(p.rsplit("_r", 1)[1].split(".")[0])
-            for p in _glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))
-        ]
-        rnd = (max(rounds) if rounds else 0) + 1
-        # Verdict r11 ask #6: the driver's CLOSING bench runs right
-        # after it writes CORRECTNESS_rN at the same HEAD, so max+1
-        # stamped the NEXT round's counter (r11's closing artifact
-        # landed as BENCH_FULL_r12.json).  Detect that case by the
-        # window itself: if the newest ledger's checked-key set is
-        # exactly the CURRENT DRIVER_WINDOW, that ledger describes
-        # this HEAD and the bench belongs to the round being closed.
-        # Mid-round benches see the PREVIOUS round's window in the
-        # ledger (the window always changes round-over-round) and
-        # keep max+1.
-        if rounds:
-            try:
-                with open(
-                    os.path.join(repo, f"CORRECTNESS_r{max(rounds):02d}.json")
-                ) as f:
-                    led = json.load(f)
-                from trafik_etl_modular_spark.registry import DRIVER_WINDOW
-
-                if isinstance(led, dict) and set(led) == set(DRIVER_WINDOW):
-                    rnd = max(rounds)
-            except Exception:  # noqa: BLE001 — stamp detection is best-effort
-                pass
-        full_path = os.path.join(repo, f"BENCH_FULL_r{rnd:02d}.json")
-        # read-merge-write (ADVICE r10): a round that benches multiple
-        # scale factors must keep EVERY sf key, not just the last run's
-        full_doc: dict = {}
-        try:
-            with open(full_path) as f:
-                loaded = json.load(f)
-            if isinstance(loaded, dict):
-                full_doc = loaded
-        except Exception:  # noqa: BLE001 — first bench of the round
-            pass
-        full_doc[key] = record
-        with open(full_path, "w") as f:
-            json.dump(full_doc, f, indent=1, sort_keys=True)
-            f.write("\n")
-    except Exception:  # noqa: BLE001
-        pass
-
-
 def _calibrate() -> float:
-    """Fixed single-thread CPU loop (~2 s quiet) — the weather gauge."""
+    """Fixed single-thread CPU loop (~2 s quiet) — the weather gauge.
+
+    Timed before and after the run: a slow gauge marks a busy host, so a
+    slow total is not read as slower code."""
     t0 = time.perf_counter()
     s = 0
     for i in range(20_000_000):
@@ -183,7 +44,6 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     _load_all()
     calib_before = _calibrate()
@@ -321,27 +181,7 @@ def main() -> int:
     # anything slow once and take the min — still a full cold
     # per-query execution, just not charged for someone else's CPU
     # burst; bounded extra wall time (only the slow tail re-runs).
-    # Delta-aware: also re-measure anything that regressed ≥1.6x vs
-    # the previous recorded run at this sf — that is precisely the
-    # noise-spike signature (real regressions reproduce on the rerun
-    # and still surface in delta_ratio; transient contention doesn't).
-    prev_q = {}
-    try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json")
-        ) as f:
-            _doc = json.load(f)
-            prev_q = (
-                _doc.get(f"sf{sf}/c{cpus}") or _doc.get(f"sf{sf}") or {}
-            ).get("queries", {}) or {}
-    except Exception:  # noqa: BLE001 — first run
-        pass
-    rerun = [
-        n
-        for n, t in timings.items()
-        if t >= 2.0
-        or (n in prev_q and prev_q[n] > 0.2 and t >= 1.6 * prev_q[n] and t >= 0.5)
-    ]
+    rerun = [n for n, t in timings.items() if t >= 2.0]
     for name in rerun:
         dt = run_once(name)
         if dt is not None:
@@ -357,10 +197,9 @@ def main() -> int:
     total = sum(timings.values())
     calib = {"before": calib_before, "after": _calibrate()}
 
-    # Key order matters: the driver stores only the LAST 2000 chars of
-    # this line, so the headline fields (value/unit/sf/n_queries) must
-    # come AFTER the >2000-char per-query map or they get truncated
-    # away (BENCH_r01/r02 both recorded parsed:null for this reason).
+    # Key order matters: a consumer that keeps only the LAST 2000 chars
+    # of this line must still see the headline fields (value/unit/sf/
+    # n_queries), so they come AFTER the >2000-char per-query map.
     out = {
         "metric": "total_wall_sec_all_queries",
         "queries": timings,
@@ -371,12 +210,11 @@ def main() -> int:
         "sf": sf,
         "n_queries": len(timings),
         "n_reruns": len(rerun),
-        "calib": calib,  # machine-weather gauge, see _write_local_artifact
+        "calib": calib,  # machine-weather gauge, see _calibrate
         "unit": "sec",
         "value": round(total, 3),
     })
     print(json.dumps(out))
-    _write_local_artifact(sf, timings, errors, total, len(rerun), calib, cpus=cpus)
     # Guaranteed-parseable short summary line as a fallback for
     # tail-truncating consumers that parse line-by-line.
     print(json.dumps({

@@ -37,9 +37,9 @@ def test_etl_end_to_end_and_idempotent(spark, feed_dir, tmp_path):
     # each page's Accident deviation has no Geometry → 4 of 8 rows
     # land with null coordinates, tallied in-flight
     assert report["batch_null_coords"] == 4
-    # 8 < expect_min_rows=50 → the anomaly guard fires (reference
-    # cli.py:94-99 semantics).
-    assert any("outside expected" in w for w in report["warnings"])
+    # 8 batch rows < expect_min_rows=50 → the anomaly guard fires
+    # (reference cli.py:94-99 semantics).
+    assert any("below expected minimum" in w for w in report["warnings"])
 
     tbl = read_incidents(spark, sink)
     got = {r["incident_id"]: r for r in tbl.collect()}
@@ -61,6 +61,37 @@ def test_etl_respects_max_pages(spark, feed_dir, tmp_path):
     sink = str(tmp_path / "incidents_limited")
     report = run_etl(spark, feed_dir, sink, make_county_dim(spark), max_pages=2)
     assert report["rows"] == 4  # 2 pages × 2 deviations
+
+
+def test_row_volume_guard_checks_this_runs_batch(spark, feed_dir, tmp_path):
+    """The [min, max] band is expected rows per ETL RUN (reference
+    cli.py:20-21), so the guard reads the batch, not the table: a
+    4-row batch into an 8-row sink is below a [6, 10] band even though
+    the table is inside it."""
+    sink = str(tmp_path / "incidents")
+    dim = make_county_dim(spark)
+    run_etl(spark, feed_dir, sink, dim)
+
+    report = run_etl(
+        spark, feed_dir, sink, dim, max_pages=2, expect_min_rows=6, expect_max_rows=10
+    )
+    assert report["rows"] == 8 and report["batch_rows"] == 4
+    assert report["warnings"] == ["row volume 4 below expected minimum 6"]
+
+
+def test_empty_feed_warns_no_rows_ingested(spark, feed_dir, tmp_path):
+    """An empty feed page ingests nothing: the report says so, rather
+    than judging the rows a previous run left in the table."""
+    sink = str(tmp_path / "incidents")
+    dim = make_county_dim(spark)
+    run_etl(spark, feed_dir, sink, dim)
+
+    empty = tmp_path / "empty_feed"
+    empty.mkdir()
+    (empty / "page_001.xml").write_text("<Response></Response>")
+    report = run_etl(spark, str(empty), sink, dim)
+    assert report["rows"] == 8 and report["batch_rows"] == 0
+    assert report["warnings"] == ["no rows ingested"]
 
 
 def test_metrics_listener_and_notifier(spark, tmp_path):

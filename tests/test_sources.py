@@ -132,6 +132,42 @@ def test_partitioned_sink_and_merge(spark, tmp_path):
     assert got == {"A": 1.0, "B": 20.0, "C": 3.0, "D": 4.0}
 
 
+def test_merge_leaves_session_overwrite_mode_alone(spark, tmp_path):
+    """The MERGE's dynamic partition overwrite is scoped to its own
+    write: after a merge, the session conf is unchanged and a plain
+    overwrite of the table still replaces every partition."""
+    from trafik_etl_modular_spark.pipelines.sink import (
+        merge_into_incidents,
+        read_incidents,
+        write_incidents,
+    )
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    schema = "incident_id string, start_time_utc string, modified_time_utc string, v double"
+
+    def rows(*data):
+        return spark.createDataFrame(list(data), schema).withColumn(
+            "start_time_utc", F.col("start_time_utc").cast("timestamp")
+        )
+
+    path = str(tmp_path / "incidents_tbl")
+    write_incidents(
+        rows(
+            ("A", "2024-01-10 08:00:00", "2024-01-10 08:00:00", 1.0),
+            ("B", "2024-01-11 08:00:00", "2024-01-11 08:00:00", 2.0),
+        ),
+        path,
+    )
+    before = spark.conf.get(key)
+    merge_into_incidents(
+        spark, path, rows(("B", "2024-01-11 08:00:00", "2024-01-12 00:00:00", 20.0))
+    )
+    assert spark.conf.get(key) == before
+
+    write_incidents(rows(("C", "2024-01-12 08:00:00", "2024-01-12 08:00:00", 3.0)), path)
+    assert [r["incident_id"] for r in read_incidents(spark, path).collect()] == ["C"]
+
+
 def test_centroid_udf_and_hybrid(spark):
     from trafik_etl_modular_spark.functions.geo import centroid_lat_lon
 

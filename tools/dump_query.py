@@ -13,11 +13,12 @@ files points at the first deviating cell.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.oracle_check import _norm_cell  # noqa: E402
 from trafik_etl_modular_spark import get_spark  # noqa: E402

@@ -1,4 +1,4 @@
-"""Local mirror of the driver's t2 correctness gate.
+"""Differential correctness gate for the query registry.
 
 Runs every registered query through Spark AND its DuckDB oracle SQL
 over the same parquet, then compares row count, column names, and an
@@ -10,13 +10,14 @@ Usage:
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 from datetime import date, datetime
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from trafik_etl_modular_spark import get_spark  # noqa: E402
 from trafik_etl_modular_spark.constants import FIXTURE_TABLES  # noqa: E402

@@ -12,9 +12,10 @@ Usage: python tools/plan_report.py [sf_dir] > PLANS.md
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from trafik_etl_modular_spark import get_spark  # noqa: E402
 from trafik_etl_modular_spark.plans.audit import audit  # noqa: E402

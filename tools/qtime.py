@@ -6,7 +6,7 @@ Times named queries on a warm session with BOTH actions:
   * toPandas (the bench.py methodology, for comparability).
 
 Optionally dumps `.explain("formatted")` per query to plans/<tag>/
-as <name>_<suffix>.txt (the optimization-round evidence files).
+as <name>_<suffix>.txt (before/after plan evidence; git-ignored).
 
 Usage:
     python tools/qtime.py [--reps N] [--plans TAG:SUFFIX] name [name ...]
@@ -20,7 +20,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from trafik_etl_modular_spark import get_spark  # noqa: E402
 from trafik_etl_modular_spark.registry import REGISTRY, _load_all  # noqa: E402
@@ -39,7 +40,7 @@ def main() -> int:
             i += 2
         elif args[i] == "--plans":
             tag, suffix = args[i + 1].split(":")
-            plans_dir = os.path.join("/root/repo/plans", tag)
+            plans_dir = os.path.join(REPO, "plans", tag)
             os.makedirs(plans_dir, exist_ok=True)
             i += 2
         else:

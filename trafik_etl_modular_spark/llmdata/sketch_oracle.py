@@ -9,7 +9,7 @@ engine, so each query's oracle can freeze exactly the engine-specific
 part — the LSH candidate set / the 64-bit signatures — and leave the
 RELATIONAL work (exact-Jaccard verification, pigeonhole chunk join,
 Hamming filter, dedup) to DuckDB itself.  Same pattern as the IVF
-probe's derived oracle (round-3 VERDICT ask #5).
+probe's derived oracle.
 
 Derivations replicate ``llmdata/dedup.py`` semantics operation by
 operation: split on a single space (trailing empties preserved, as

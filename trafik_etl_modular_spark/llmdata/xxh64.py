@@ -8,8 +8,9 @@ block, and strings as their UTF-8 bytes.  Re-deriving it here is what
 lets the MinHash/SimHash sketch queries carry REAL DuckDB oracles:
 the sketch (the only engine-specific part) is recomputed
 independently and frozen into the SQL, and DuckDB does the relational
-verification work itself (llmdata/dedup.py docstrings; round-3
-VERDICT.md ask #5 pattern).
+verification work itself (the frozen-sketch oracle: the
+``llmdata/dedup.py`` sketches, re-derived and frozen by
+``llmdata/sketch_oracle.py``).
 
 Every function takes/returns ``numpy.uint64`` (two's-complement view
 of Spark's signed long); :func:`to_signed` converts for comparison

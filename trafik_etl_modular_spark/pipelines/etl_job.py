@@ -9,9 +9,10 @@ Reference lifecycle reproduced end-to-end:
   load      — partition-scoped MERGE into the date-partitioned table
               (S5/S6; idempotent — re-running the same feed is a
               no-op by latest-wins)
-  report    — single-pass KPI aggregation (A4) + row-volume anomaly
-              guards (reference cli.py:20-21,94-99: warn when outside
-              [expect_min, expect_max]) + wall-clock seconds (F19)
+  report    — single-pass KPI aggregation (A4) + the row-volume
+              anomaly guard on THIS run's batch rows (reference
+              cli.py:20-21,94-99: warn when outside [expect_min,
+              expect_max]) + wall-clock seconds (F19)
 
 Driver-side observability (the reference's Slack notifier,
 notifier.py:43-64) stays OUT of the engine: the returned report dict
@@ -34,6 +35,7 @@ from trafik_etl_modular_spark.pipelines.sink import (
     read_incidents,
 )
 from trafik_etl_modular_spark.sources.xml_feed import register_xml_feed
+from trafik_etl_modular_spark.streaming.observability import check_row_volume
 
 # The 13-column public schema (reference load_sqlite.py:6-41 — DDL +
 # COLS_13), enforced on every write via conform_schema.
@@ -129,20 +131,14 @@ def run_etl(
         )
         .collect()[0]
     )
-    warnings = []
-    if kpi["rows"] == 0:
-        warnings.append("no rows in table after run")
-    elif not (expect_min_rows <= kpi["rows"] <= expect_max_rows):
-        warnings.append(
-            f"row volume {kpi['rows']} outside expected "
-            f"[{expect_min_rows}, {expect_max_rows}]"
-        )
+    batch_rows = int(batch_metrics.get("batch_rows") or 0)
+    volume_warning = check_row_volume(batch_rows, expect_min_rows, expect_max_rows)
     return {
         "rows": kpi["rows"],
         "pagar": kpi["pagar"],
         "kommande": kpi["kommande"],
-        "batch_rows": int(batch_metrics.get("batch_rows") or 0),
+        "batch_rows": batch_rows,
         "batch_null_coords": int(batch_metrics.get("batch_null_coords") or 0),
         "seconds": round(time.perf_counter() - t0, 2),
-        "warnings": warnings,
+        "warnings": [volume_warning] if volume_warning else [],
     }

@@ -59,7 +59,10 @@ def merge_into_incidents(
        pruning via the filter);
     3. union + latest-wins on the key;
     4. dynamic-partition-overwrite those partitions atomically-enough
-       for parquet (Delta MERGE is the transactional upgrade).
+       for parquet (Delta MERGE is the transactional upgrade).  The
+       mode is a per-write option, never a session setting, so a later
+       plain ``write_incidents(mode="overwrite")`` in the same session
+       still replaces the whole table.
     """
     upd = updates.withColumn("event_date", F.to_date("start_time_utc")).withColumn(
         "__src", F.lit(1)
@@ -68,7 +71,6 @@ def merge_into_incidents(
     if not touched:
         return
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     merged = upd
     if os.path.exists(path):
         existing = (
@@ -86,6 +88,7 @@ def merge_into_incidents(
     (
         resolved.repartition(F.col("event_date"))
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("event_date")
         .parquet(path)
     )
@@ -112,7 +115,6 @@ def compact_partitions(
     import glob as _glob
     import math
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     part_dirs = sorted(_glob.glob(os.path.join(path, "event_date=*")))
     result: dict = {}
     for d in part_dirs:
@@ -129,6 +131,7 @@ def compact_partitions(
         rewritten = part_df.repartition(n_target).localCheckpoint(eager=True)
         (
             rewritten.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("event_date")
             .parquet(path)
         )

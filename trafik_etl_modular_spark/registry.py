@@ -29,10 +29,9 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # An oracle is either a literal SQL string or a BUILDER
 # ``(sf_dir) -> str`` for oracles that must be derived from the
 # fixture (e.g. the IVF probe freezes the deterministically-trained
-# candidate set into an IN-list).  The driver contract surfaces plain
-# strings, rendered for the driver's documented sf (DRIVER_SF_DIR);
-# tools/oracle_check.py re-renders per sweep sf_dir.
-# The scale factor the driver's t2 correctness pass runs at.
+# candidate set into an IN-list).  ``oracle_sql()`` surfaces plain
+# strings rendered at DRIVER_SF_DIR; tools/oracle_check.py re-renders
+# per sweep sf_dir.
 DRIVER_SF_DIR = "/root/testdata/sf0.01"
 
 
@@ -50,8 +49,8 @@ class Query:
 
 REGISTRY: dict[str, Query] = {}
 
-# Modules that register queries on import. Order is documentation-only:
-# the externally visible iteration order is fixed by DRIVER_WINDOW below.
+# Modules that register queries on import; ``queries()`` iterates in
+# registration order.
 _QUERY_MODULES = [
     "trafik_etl_modular_spark.queries.tpch",
     "trafik_etl_modular_spark.queries.tpch_deep",
@@ -81,127 +80,6 @@ _QUERY_MODULES = [
     "trafik_etl_modular_spark.queries.market",
 ]
 
-# The driver's correctness pass checks exactly the FIRST 50 queries in
-# registry iteration order.  This manifest pins those 50 slots
-# explicitly so (a) families rotate through the official record until
-# every oracle-bearing query has a driver-green row in some round, and
-# (b) adding a query can never silently evict a family from the checked
-# window (a pytest asserts registry[0:50] == DRIVER_WINDOW).  Every
-# name here is oracle-bearing.
-#
-# Round-10 rotation (verdict r09 asks #1 and #2).  The rotation
-# cadence is now TIERED — the structural relief the r09 verdict asked
-# for: with N>200 a single staleness cycle made round 11 owe 61
-# mandatory slots in a 50-slot window.  The tier math lives in ONE
-# place, tools/stamps.py: ACTIVE queries (<= 1 lifetime driver-green
-# stamp) rotate on the base cycle max(4, ceil(N/50)); MATURE queries
-# (>= 2 lifetime stamps in distinct rounds, semantically unchanged
-# per tools/stamped_hashes.json) rotate on 2x base.  Never-stamped
-# and changed-since-stamp queries always enter the next window.
-# `python tools/stamps.py --plan-next` prints each round's exact
-# obligation; tests/test_contract.py::test_window_covers_stale_stamps
-# enforces it from the same module.  Round 13 (optimization round 2):
-# the MANDATORY tier cohort is ZERO (end-of-r12 --plan-next), so the
-# 50 slots carry, in order:
-#   (1) the 15 PENDING_RESTAMP_R13 queries — semantically rewritten by
-#       optimization round 12 AFTER its window froze; the driver's
-#       oracle has never stamped the rewritten forms (VERDICT r12
-#       "Next round" item 1; test_pending_restamp_rotates_into_r13
-#       enforces this block);
-#   (2) the queries THIS optimization round touches (hash-manifest
-#       rule: edited queries must sit in the next stamp-bound window),
-#       five of which were ALSO in the r12 window — a deliberate
-#       overlap cohort so the driver's round-over-round PERF
-#       comparison has n_common > 0 (VERDICT r12 item 8; r12 had a
-#       fully-rotated window and the comparison produced nothing);
-#   (3) tier-aware fill, soonest deadline first (r09/r10/r11 actives).
-DRIVER_WINDOW: list[str] = [
-    # --- (1) pending restamp: r12-optimization rewrites, never driver-
-    # stamped in their current form --------------------------------------
-    "tpch_q2_min_cost_supplier",
-    "tpch_q11_important_stock",
-    "tpch_q16_supplier_count",
-    "tpch_q20_excess_inventory",
-    "sim_quantized_recall",
-    "sim_ann_ivf_quantized_probe",
-    "sim_ann_ivf_pq_probe",
-    "sim_pq_recall",
-    "sim_random_projection_jl",
-    "graph_triangle_count",
-    "graph_common_neighbor_linkpred",
-    "agg_cms_heavy_hitters",
-    "join_spatial_neighbor_pairs",
-    "join_bloom_semi_prefilter",
-    "dedup_lsh_calibration",
-    # --- (2) round-13 optimization targets; the first five are the
-    # r12-window OVERLAP cohort (driver n_common > 0) ---------------------
-    "graph_jaccard_linkpred",
-    "graph_personalized_pagerank",
-    "merge_scd2_retro_correction",
-    "events_changepoint_binseg",
-    "vocab_bpe_merge_rounds",
-    "graph_label_propagation",
-    "graph_pagerank_3iter",
-    "dedup_simhash_calibration",
-    "dedup_simhash_candidates",
-    "dedup_clusters",
-    "dedup_ngram_jaccard_prefix",
-    "dedup_containment_pairs",
-    "sim_neardup_embeddings",
-    "streaming_bitmap_distinct_monitor",
-    "streaming_sessionize_stateful",
-    # --- (3) tier-aware fill, soonest deadline first ---------------------
-    "text_host_quality_policy",
-    "agg_bitmap_distinct_rollup",
-    "agg_pearson_correlation",
-    "dq_cusum_changepoint",
-    "dq_seasonal_decompose",
-    "events_transition_matrix",
-    "sample_shuffle_shards",
-    "sample_temporal_split_leakage",
-    "sim_mmr_rerank",
-    "streaming_cusum_monitor",
-    "text_bm25_maxscore_prune",
-    "text_bm25_topk",
-    "text_chunk_windows",
-    "agg_exact_percentile_grid",
-    "dedup_blocking_quality",
-    "dq_partition_skew_audit",
-    "dq_referential_integrity",
-    "events_attribution_touch",
-    "events_autocorrelation",
-    "events_interarrival_histogram",
-]
-
-# Optimization round 12 changed these 15 queries' fingerprints AFTER
-# the r12 window was frozen (ADVICE r12: the old comment said 14; the
-# list has always held 15 names — see OPTIMIZATION_r12.md for the
-# per-query measurement evidence; every one re-verified against the
-# DuckDB oracle at sf0.01 AND sf0.1 in that session).  The r12 window
-# was already at 50/50 with 43 hard-pinned never-stamped additions, so
-# they could not rotate in that round.  RESOLVED at the r13 rotation:
-# all 15 now lead DRIVER_WINDOW above, so the driver's r13 ledger
-# stamps the rewritten forms.  The list stays (a) as the historical
-# record and (b) because tests/test_contract.py::
-# test_pending_restamp_rotates_into_r13 asserts the containment.
-PENDING_RESTAMP_R13: list[str] = [
-    "tpch_q2_min_cost_supplier",
-    "tpch_q11_important_stock",
-    "tpch_q16_supplier_count",
-    "tpch_q20_excess_inventory",
-    "sim_quantized_recall",
-    "sim_ann_ivf_quantized_probe",
-    "sim_ann_ivf_pq_probe",
-    "sim_pq_recall",
-    "sim_random_projection_jl",
-    "graph_triangle_count",
-    "graph_common_neighbor_linkpred",
-    "agg_cms_heavy_hitters",
-    "join_spatial_neighbor_pairs",
-    "join_bloom_semi_prefilter",
-    "dedup_lsh_calibration",
-]
-
 
 def query(name: str, sql: str | None = None, tags: tuple[str, ...] = ()):
     """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` under ``name``."""
@@ -222,25 +100,6 @@ def _load_all() -> None:
     # ModuleNotFoundError swallow).
     for mod in _QUERY_MODULES:
         importlib.import_module(mod)
-    _apply_driver_window_order()
-
-
-def _apply_driver_window_order() -> None:
-    """Rebuild REGISTRY so iteration starts with DRIVER_WINDOW.
-
-    The driver derives its 50-query correctness sample from
-    ``queries()`` dict order, so the order must be an explicit,
-    test-guarded contract — not an accident of module import order.
-    Idempotent; fails loudly if a manifest name disappears.
-    """
-    missing = [n for n in DRIVER_WINDOW if n not in REGISTRY]
-    if missing:
-        raise RuntimeError(f"DRIVER_WINDOW names not registered: {missing}")
-    window = {n: REGISTRY[n] for n in DRIVER_WINDOW}
-    rest = {n: q for n, q in REGISTRY.items() if n not in window}
-    REGISTRY.clear()
-    REGISTRY.update(window)
-    REGISTRY.update(rest)
 
 
 def all_queries() -> dict[str, QueryFn]:
