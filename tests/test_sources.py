@@ -109,6 +109,7 @@ def test_partitioned_sink_and_merge(spark, tmp_path):
             ("A", "2024-01-10 08:00:00", "2024-01-10 08:00:00", 1.0),
             ("B", "2024-01-10 09:00:00", "2024-01-10 09:00:00", 2.0),
             ("C", "2024-01-11 09:00:00", "2024-01-11 09:00:00", 3.0),
+            ("E", "2024-01-09 09:00:00", "2024-01-09 09:00:00", 5.0),
         ],
         "incident_id string, start_time_utc string, modified_time_utc string, v double",
     ).withColumn("start_time_utc", F.col("start_time_utc").cast("timestamp"))
@@ -119,17 +120,66 @@ def test_partitioned_sink_and_merge(spark, tmp_path):
 
     updates = spark.createDataFrame(
         [
-            ("B", "2024-01-10 09:00:00", "2024-01-12 00:00:00", 20.0),  # newer version
-            ("D", "2024-01-10 11:00:00", "2024-01-12 00:00:00", 4.0),  # new key
+            ("C", "2024-01-11 09:00:00", "2024-01-12 00:00:00", 30.0),  # newer version
+            ("D", "2024-01-12 11:00:00", "2024-01-12 00:00:00", 4.0),  # new key
+            # new versions whose start moved to a day the batch does not
+            # otherwise touch: A leaves B behind, E leaves its day empty
+            ("A", "2024-01-11 08:00:00", "2024-01-12 00:00:00", 10.0),
+            ("E", "2024-01-11 10:00:00", "2024-01-12 00:00:00", 50.0),
         ],
         "incident_id string, start_time_utc string, modified_time_utc string, v double",
     ).withColumn("start_time_utc", F.col("start_time_utc").cast("timestamp"))
     merge_into_incidents(spark, path, updates)
 
-    got = {
-        r["incident_id"]: r["v"] for r in read_incidents(spark, path).collect()
+    rows = read_incidents(spark, path).collect()
+    ids = [r["incident_id"] for r in rows]
+    assert len(ids) == len(set(ids)), sorted(
+        (r["incident_id"], r["v"], str(r["event_date"])) for r in rows
+    )
+    got = {r["incident_id"]: (r["v"], str(r["event_date"])) for r in rows}
+    assert got == {
+        "A": (10.0, "2024-01-11"),
+        "B": (2.0, "2024-01-10"),
+        "C": (30.0, "2024-01-11"),
+        "D": (4.0, "2024-01-12"),
+        "E": (50.0, "2024-01-11"),
     }
-    assert got == {"A": 1.0, "B": 20.0, "C": 3.0, "D": 4.0}
+
+
+def test_merge_evaluates_its_batch_once(spark, tmp_path):
+    """The MERGE executes its batch once: the touched-partition collect
+    and the rewrite read one materialized copy, so an upstream plan
+    (the feed source, the normalize windows) runs once per batch.  A
+    Python UDF filter on the key counts evaluated rows."""
+    from trafik_etl_modular_spark.pipelines.sink import (
+        merge_into_incidents,
+        write_incidents,
+    )
+
+    schema = "incident_id string, start_time_utc string, modified_time_utc string, v double"
+
+    def rows(*data):
+        return spark.createDataFrame(list(data), schema).withColumn(
+            "start_time_utc", F.col("start_time_utc").cast("timestamp")
+        )
+
+    path = str(tmp_path / "incidents_tbl")
+    write_incidents(rows(("A", "2024-01-10 08:00:00", "2024-01-10 08:00:00", 1.0)), path)
+
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def count_row(key):
+        evaluated.add(1)
+        return True
+
+    counted = F.udf(count_row, "boolean").asNondeterministic()
+    batch = rows(
+        ("A", "2024-01-10 08:00:00", "2024-01-12 00:00:00", 10.0),
+        ("B", "2024-01-11 08:00:00", "2024-01-12 00:00:00", 2.0),
+        ("C", "2024-01-12 08:00:00", "2024-01-12 00:00:00", 3.0),
+    ).filter(counted("incident_id"))
+    merge_into_incidents(spark, path, batch)
+    assert evaluated.value == 3
 
 
 def test_merge_leaves_session_overwrite_mode_alone(spark, tmp_path):

@@ -941,11 +941,6 @@ def connected_components(
     scales.  Pass 0 to force the distributed path (tests do).
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    if n_partitions:
-        sym = sym.repartition(n_partitions, "v")
-    sym = sym.localCheckpoint(eager=False)
-
     if driver_threshold:
         # limit(threshold+1) bounds the driver read — if the full
         # threshold+1 rows come back the graph is "large" and nothing
@@ -985,6 +980,10 @@ def connected_components(
                 ]
             )
             return edges.sparkSession.createDataFrame(rows, out_schema)
+    sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    if n_partitions:
+        sym = sym.repartition(n_partitions, "v")
+    sym = sym.localCheckpoint(eager=False)
     labels = (
         sym.select(F.col("u").alias("id"))
         .distinct()

@@ -1018,7 +1018,7 @@ def semantic_dedup(
     """SemDeDup-style SEMANTIC deduplication (Abbas et al. 2023,
     "SemDeDup: Data-efficient learning at web-scale through semantic
     deduplication"): cluster the embedding space with the sample-
-    trained spherical k-means quantizer (:func:`ivf_index`), generate
+    trained spherical k-means quantizer (:func:`ivf_train`), generate
     cosine-near-dup pairs ONLY within each learned cluster, resolve
     the pairs into duplicate groups (connected components), and keep
     the minimum id per group.
@@ -1042,9 +1042,10 @@ def semantic_dedup(
     from trafik_etl_modular_spark.llmdata.dedup import connected_components
 
     if assigned is None:
-        assigned, _ = ivf_index(
+        centers = ivf_train(
             embeddings, n_centroids=n_clusters, id_col=id_col, vec_col=vec_col, seed=seed
         )
+        assigned = ivf_assign(embeddings, centers, id_col, vec_col)
         # Both legs of the within-cluster pair join read the assignment —
         # materialize it once (at lake scale: the persisted ivf_bucket-
         # partitioned layout plays this role).
@@ -1056,18 +1057,21 @@ def semantic_dedup(
         id_col=id_col,
         vec_col="__vec",
     ).localCheckpoint(eager=False)
-    cc = connected_components(pairs, "id_a", "id_b", n_partitions=8)
+    cc = connected_components(pairs, "id_a", "id_b", n_partitions=8).withColumnRenamed(
+        "id", id_col
+    )
+    # Group sizes come from the small component set (one row per vector
+    # that has a near-dup pair), so the corpus is read once, by the one
+    # left join below.
+    sizes = cc.groupBy("label").agg(F.count("*").alias("group_size"))
     labeled = embeddings.select(F.col(id_col)).join(
-        cc.withColumnRenamed("id", id_col), id_col, "left"
+        cc.join(sizes, "label"), id_col, "left"
     )
     # Singletons (no near-dup pair) keep their own id as the group.
-    grouped = labeled.select(
-        F.col(id_col), F.coalesce("label", F.col(id_col)).alias("group_id")
-    )
-    sizes = grouped.groupBy("group_id").agg(F.count("*").alias("group_size"))
-    return grouped.join(sizes, "group_id").select(
+    group_id = F.coalesce("label", F.col(id_col))
+    return labeled.select(
         F.col(id_col),
-        "group_id",
-        "group_size",
-        (F.col(id_col) == F.col("group_id")).alias("is_keeper"),
+        group_id.alias("group_id"),
+        F.coalesce("group_size", F.lit(1)).alias("group_size"),
+        (F.col(id_col) == group_id).alias("is_keeper"),
     )

@@ -27,8 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trafik_etl_modular_spark.constants import NOW_UTC
-from trafik_etl_modular_spark.functions.scalars import parse_iso_utc
-from trafik_etl_modular_spark.pipelines.ingest import normalize_incidents
+from trafik_etl_modular_spark.pipelines.ingest import feed_to_flat, normalize_incidents
 from trafik_etl_modular_spark.pipelines.sink import (
     conform_schema,
     merge_into_incidents,
@@ -47,32 +46,6 @@ INCIDENTS_DDL = (
     "status string"
 )
 COLS_13 = [f.split(" ")[0] for f in INCIDENTS_DDL.split(", ")]
-
-
-def feed_to_flat(raw: DataFrame) -> DataFrame:
-    """Adapt the feed source's page rows to the normalize pipeline's
-    input contract (the feed already flattened Situation→Deviation;
-    this is typing + the reference's id-fallback rule,
-    transform.py:62)."""
-    return raw.select(
-        F.col("situation_id"),
-        parse_iso_utc("modified_time").alias("modified_time_utc"),
-        parse_iso_utc("publication_time").alias("publication_time_utc"),
-        F.coalesce(
-            F.col("deviation_id"),
-            F.concat_ws(":", F.col("situation_id"), F.col("start_time")),
-        ).alias("incident_id"),
-        F.trim(F.coalesce(F.col("message"), F.lit(""))).alias("message"),
-        F.trim(F.coalesce(F.col("message_type"), F.lit(""))).alias("message_type"),
-        F.trim(F.coalesce(F.col("location_descriptor"), F.lit(""))).alias(
-            "location_descriptor"
-        ),
-        F.trim(F.coalesce(F.col("road_number"), F.lit(""))).alias("road_number"),
-        F.col("county_no"),
-        parse_iso_utc("start_time").alias("start_time_utc"),
-        parse_iso_utc("end_time").alias("end_time_utc"),
-        F.col("wgs84").alias("geometry_wgs84"),
-    )
 
 
 def run_etl(

@@ -6,7 +6,11 @@ The upstream feed is hierarchical: `Situation` (1) → `Deviation` (N)
 times in pandas (/root/reference/src/trv/endpoints.py:107-163,
 etl_runner.py:81-134, transform.py:49-103) with subtly different
 semantics; this is the ONE parameterized pipeline (SURVEY.md §3.2
-note) expressed as explode + narrow column transforms:
+note).  The flat-row typing (`feed_to_flat`) is shared with
+`etl_job.run_etl`: the XML feed source yields Deviation rows already
+flat, and `flatten_situations` explodes the nested frame into the
+same column names first, so both paths type and normalize alike.
+Expressed as explode + narrow column transforms:
 
   * inner explode (Situations with no Deviations are skipped — both
     reference paths do this, endpoints.py:121, etl_runner.py:94-96)
@@ -48,34 +52,53 @@ SITUATION_SCHEMA = """
 """
 
 
+def feed_to_flat(raw: DataFrame) -> DataFrame:
+    """Type the feed's flat Deviation rows into the normalize
+    pipeline's input contract: ISO-8601 strings → UTC timestamps,
+    trimmed text, and the reference's id-fallback rule
+    (transform.py:62).  The one flat-row typing: the XML feed source
+    (``run_etl``) and :func:`flatten_situations` both end here."""
+    return raw.select(
+        F.col("situation_id"),
+        parse_iso_utc("modified_time").alias("modified_time_utc"),
+        parse_iso_utc("publication_time").alias("publication_time_utc"),
+        F.coalesce(
+            F.col("deviation_id"),
+            F.concat_ws(":", F.col("situation_id"), F.col("start_time")),
+        ).alias("incident_id"),
+        F.trim(F.coalesce(F.col("message"), F.lit(""))).alias("message"),
+        F.trim(F.coalesce(F.col("message_type"), F.lit(""))).alias("message_type"),
+        F.trim(F.coalesce(F.col("location_descriptor"), F.lit(""))).alias(
+            "location_descriptor"
+        ),
+        F.trim(F.coalesce(F.col("road_number"), F.lit(""))).alias("road_number"),
+        F.col("county_no"),
+        parse_iso_utc("start_time").alias("start_time_utc"),
+        parse_iso_utc("end_time").alias("end_time_utc"),
+        F.col("wgs84").alias("geometry_wgs84"),
+    )
+
+
 def flatten_situations(raw: DataFrame) -> DataFrame:
     """S3 — one row per Deviation, parent fields repeated. Plain
     (inner) explode: deviation-less Situations vanish, matching both
-    reference implementations."""
-    d = F.col("d")
-    return raw.select(
-        F.col("Id").alias("situation_id"),
-        parse_iso_utc("ModifiedTime").alias("modified_time_utc"),
-        parse_iso_utc("PublicationTime").alias("publication_time_utc"),
-        F.explode("Deviation").alias("d"),
-    ).select(
-        "situation_id",
-        "modified_time_utc",
-        "publication_time_utc",
-        F.coalesce(
-            d.getField("Id"),
-            F.concat_ws(":", F.col("situation_id"), d.getField("StartTime")),
-        ).alias("incident_id"),
-        F.trim(F.coalesce(d.getField("Message"), F.lit(""))).alias("message"),
-        F.trim(F.coalesce(d.getField("MessageType"), F.lit(""))).alias("message_type"),
-        F.trim(F.coalesce(d.getField("LocationDescriptor"), F.lit(""))).alias(
-            "location_descriptor"
-        ),
-        F.trim(F.coalesce(d.getField("RoadNumber"), F.lit(""))).alias("road_number"),
-        F.element_at(d.getField("CountyNo"), 1).alias("county_no"),
-        parse_iso_utc(d.getField("StartTime")).alias("start_time_utc"),
-        parse_iso_utc(d.getField("EndTime")).alias("end_time_utc"),
-        d.getField("Geometry").getField("WGS84").alias("geometry_wgs84"),
+    reference implementations.  The explode yields the feed source's
+    column names, so the typing is :func:`feed_to_flat`'s."""
+    return feed_to_flat(
+        raw.select("*", F.explode("Deviation").alias("d")).selectExpr(
+            "Id AS situation_id",
+            "ModifiedTime AS modified_time",
+            "PublicationTime AS publication_time",
+            "d.Id AS deviation_id",
+            "d.Message AS message",
+            "d.MessageType AS message_type",
+            "d.LocationDescriptor AS location_descriptor",
+            "d.RoadNumber AS road_number",
+            "element_at(d.CountyNo, 1) AS county_no",
+            "d.StartTime AS start_time",
+            "d.EndTime AS end_time",
+            "d.Geometry.WGS84 AS wgs84",
+        )
     )
 
 

@@ -9,34 +9,43 @@ Layout decisions (§7.1):
   * per-partition file sizing via repartition on the partition key
     before write (small-file control); on Delta this would be
     OPTIMIZE/Z-ORDER on `county_name` — parquet min/max stats give
-    data skipping on sorted columns.
-  * upsert = partition-scoped rewrite: only partitions present in the
-    updates batch are rewritten (union + latest-wins within those),
-    not the whole table — the pure-parquet equivalent of Delta
-    `MERGE INTO`, with rewrite volume ∝ touched partitions.
+    data skipping on sorted columns.  The initial load and the MERGE
+    share this one partitioned write.
+  * upsert = partition-scoped rewrite of the partitions the updates
+    batch lands in plus those holding older versions of its keys
+    (union + latest-wins within those), not the whole table — the
+    pure-parquet equivalent of Delta `MERGE INTO`, with rewrite
+    volume ∝ touched partitions, one row per key and one execution
+    of the batch.  The dynamic partition overwrite is NOT atomic.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 
 from trafik_etl_modular_spark.queries.dedup import latest_wins
 
 
-def write_incidents(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Initial load: date-partitioned parquet, one shuffle to co-locate
-    partition data (repartition on the partition column so each date
-    writes a bounded file count, not one file per task)."""
-    (
+def _partitioned_writer(df: DataFrame) -> DataFrameWriter:
+    """The sink's one partitioned write: derive `event_date`, then one
+    shuffle to co-locate partition data (repartition on the partition
+    column so each date writes a bounded file count, not one file per
+    task)."""
+    return (
         df.withColumn("event_date", F.to_date("start_time_utc"))
         .repartition(F.col("event_date"))
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("event_date")
-        .parquet(path)
     )
+
+
+def write_incidents(df: DataFrame, path: str) -> None:
+    """Initial load: replace the table with `df`, date-partitioned."""
+    _partitioned_writer(df).parquet(path)
 
 
 def read_incidents(spark: SparkSession, path: str) -> DataFrame:
@@ -53,45 +62,50 @@ def merge_into_incidents(
     """Partition-scoped MERGE: rewrite only the event_date partitions
     the updates touch.
 
-    1. derive the touched partition set from the updates (driver-side
-       collect of a tiny distinct list);
-    2. read ONLY those partitions from the existing table (partition
-       pruning via the filter);
-    3. union + latest-wins on the key;
-    4. dynamic-partition-overwrite those partitions atomically-enough
-       for parquet (Delta MERGE is the transactional upgrade).  The
-       mode is a per-write option, never a session setting, so a later
-       plain ``write_incidents(mode="overwrite")`` in the same session
-       still replaces the whole table.
+    1. materialize the tagged batch once: every later step reads that
+       copy, so the upstream plan (feed source, normalize) runs once;
+    2. collect the rewrite set, a tiny distinct list: the partitions
+       the batch lands in, plus those whose rows share a batch key
+       (semi-join on the table's `(key, event_date)` projection) — a
+       new version that moved to another day must replace its old
+       row there, or the table holds the key twice;
+    3. read ONLY those partitions (partition pruning via the filter);
+    4. union + latest-wins on the key;
+    5. dynamic-partition-overwrite those partitions, as a per-write
+       option, so a later ``write_incidents`` in the same session
+       still replaces the whole table.  Over plain parquet this is
+       NOT atomic: a crash mid-write can leave some partitions
+       rewritten and others not.
     """
-    upd = updates.withColumn("event_date", F.to_date("start_time_utc")).withColumn(
-        "__src", F.lit(1)
+    upd = (
+        updates.withColumn("event_date", F.to_date("start_time_utc"))
+        .withColumn("__src", F.lit(1))
+        .localCheckpoint(eager=True)
     )
-    touched = [r[0] for r in upd.select("event_date").distinct().collect()]
+    # A table not yet written merges like an empty one.
+    table = read_incidents(spark, path) if os.path.exists(path) else upd.limit(0)
+    held = table.join(F.broadcast(upd.select(key)), key, "left_semi")
+    dates = upd.select("event_date").union(held.select("event_date"))
+    touched = [r[0] for r in dates.distinct().collect()]
     if not touched:
         return
+    parts = [os.path.join(path, f"event_date={d}") for d in touched]
+    before = {p: set(os.listdir(p)) for p in parts if os.path.isdir(p)}
 
-    merged = upd
-    if os.path.exists(path):
-        existing = (
-            read_incidents(spark, path)
-            .filter(F.col("event_date").isin(touched))
-            .withColumn("__src", F.lit(0))
-        )
-        merged = existing.unionByName(upd, allowMissingColumns=True)
-
+    existing = table.filter(F.col("event_date").isin(touched)).withColumn("__src", F.lit(0))
+    merged = existing.unionByName(upd, allowMissingColumns=True)
     ordering = [F.desc(c) for c in order_cols] + [F.desc("__src")]
     resolved = latest_wins(merged, [key], ordering).drop("__src")
     # Materialize BEFORE the write — the plan reads the same path it
     # overwrites, which Spark (rightly) refuses to run lazily.
     resolved = resolved.localCheckpoint(eager=True)
-    (
-        resolved.repartition(F.col("event_date"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("event_date")
-        .parquet(path)
-    )
+    _partitioned_writer(resolved).option("partitionOverwriteMode", "dynamic").parquet(path)
+    # The overwrite replaces only partitions it writes rows to, each
+    # wholesale; one still holding an old file got none because all
+    # its keys moved to another day, so it goes.
+    for part, files in before.items():
+        if files & set(os.listdir(part)):
+            shutil.rmtree(part)
 
 
 def compact_partitions(

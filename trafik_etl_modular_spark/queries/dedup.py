@@ -285,12 +285,7 @@ def merge_upsert(base: DataFrame, updates: DataFrame, key_cols: list[str]) -> Da
     tagged = base.withColumn("__src", F.lit(0)).unionByName(
         updates.withColumn("__src", F.lit(1))
     )
-    w = Window.partitionBy(*key_cols).orderBy(F.desc("__src"))
-    return (
-        tagged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__src")
-    )
+    return latest_wins(tagged, key_cols, [F.desc("__src")]).drop("__src")
 
 
 _MERGE_SQL = """

@@ -64,17 +64,12 @@ def get_spark(
         # but preferSortMergeJoin=false ALSO lets static planning pick
         # SHJ from ESTIMATED stats, which has no measured-size bound
         # and no sort-merge fallback — a badly misestimated build side
-        # can still OOM there.  SPARK_GRAFT_PREFER_SMJ=true is the
-        # mitigation for misestimate-prone cluster profiles where
-        # sort-merge's graceful spill is preferred wholesale.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP", "64m"),
-        )
+        # can still OOM there.  preferSortMergeJoin=true via
+        # ``extra_conf`` is the mitigation for misestimate-prone
+        # cluster profiles where sort-merge's graceful spill is
+        # preferred wholesale.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -15,10 +15,11 @@ from __future__ import annotations
 
 import itertools
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trafik_etl_modular_spark.catalog import _ensure_session_confs, table_path
+from trafik_etl_modular_spark.queries.dedup import latest_wins
 
 _counter = itertools.count()
 
@@ -589,14 +590,6 @@ def upsert_sink_run(
     """
     state: dict[str, DataFrame] = {}
 
-    def latest_per_entity(df: DataFrame) -> DataFrame:
-        w = Window.partitionBy("entity_id").orderBy(F.desc("ts"), F.desc("event_id"))
-        return (
-            df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         upd = batch_df.withColumn("entity_id", F.col("event_id") % 700).select(
             "entity_id", "event_id", "ts", "value"
@@ -607,7 +600,9 @@ def upsert_sink_run(
         # final state independent of how the stream was micro-batched —
         # the idempotent at-least-once semantics the reference's keyed
         # upsert provides across overlapping daily re-fetches.
-        state["table"] = latest_per_entity(merged).localCheckpoint(eager=True)
+        state["table"] = latest_wins(
+            merged, ["entity_id"], [F.desc("ts"), F.desc("event_id")]
+        ).localCheckpoint(eager=True)
 
     ev = read_events_stream(spark, sf_dir)
     if listener is not None:
