@@ -238,7 +238,7 @@ def test_centroid_udf_and_hybrid(spark):
 
 
 def test_compaction_reduces_files_preserves_data(spark, tmp_path):
-    from trafik_etl_modular_spark.pipelines.sink import compact_partitions
+    from trafik_etl_modular_spark.operators.partitions import replace_partitions
 
     path = str(tmp_path / "fragmented")
     df = spark.createDataFrame(
@@ -255,13 +255,76 @@ def test_compaction_reduces_files_preserves_data(spark, tmp_path):
     before = glob.glob(os.path.join(path, "event_date=2024-01-10", "*.parquet"))
     assert len(before) == 12
 
-    report = compact_partitions(spark, path, target_file_bytes=1 << 30)
+    replace_partitions(spark.read.parquet(path), path, "event_date", ["2024-01-10"])
     after = glob.glob(os.path.join(path, "event_date=2024-01-10", "*.parquet"))
-    assert len(after) == 1 and report["2024-01-10"] == 1
+    assert len(after) == 1
 
     got = spark.read.parquet(path).collect()
     assert len(got) == 500
     assert {r["incident_id"] for r in got} == {f"I{i}" for i in range(500)}
+
+
+def _listing(path: str) -> list[str]:
+    """Every file and directory under `path`, hidden ones included."""
+    return sorted(
+        os.path.relpath(os.path.join(d, n), path)
+        for d, dirs, files in os.walk(path)
+        for n in dirs + files
+    )
+
+
+def test_replace_partitions_int_layout(spark, tmp_path):
+    """The IVF index layout (int partitions): the listed buckets get
+    exactly the given rows, in place; a listed bucket whose rows are all
+    gone leaves the layout (a fully tombstoned bucket under
+    ``ivf_purge``); unlisted buckets keep their exact files."""
+    from trafik_etl_modular_spark.operators.partitions import replace_partitions
+
+    path = str(tmp_path / "assigned")
+    spark.range(80).select(
+        F.col("id").alias("vec_id"), (F.col("id") % 4).cast("int").alias("ivf_bucket")
+    ).repartition(3).write.partitionBy("ivf_bucket").parquet(path)
+    kept = {b: sorted(os.listdir(f"{path}/ivf_bucket={b}")) for b in (0, 1)}
+
+    # bucket 2 keeps half its rows, bucket 3 loses every row
+    rows = spark.read.parquet(path).filter(
+        (F.col("ivf_bucket") == 2) & (F.col("vec_id") % 8 == 2)
+    )
+    replace_partitions(rows, path, "ivf_bucket", [2, 3])
+
+    assert {b: sorted(os.listdir(f"{path}/ivf_bucket={b}")) for b in (0, 1)} == kept
+    assert not os.path.exists(f"{path}/ivf_bucket=3")
+    assert len(glob.glob(f"{path}/ivf_bucket=2/*.parquet")) == 1
+    got = {(r["vec_id"], r["ivf_bucket"]) for r in spark.read.parquet(path).collect()}
+    assert got == {(i, i % 4) for i in range(80) if i % 4 < 2 or i % 8 == 2}
+
+
+def test_replace_partitions_failed_write_leaves_table(spark, tmp_path):
+    """A task that fails mid-write commits nothing: the table's files,
+    hidden ones included, and its rows are exactly as before."""
+    from pyspark.errors import PythonException
+
+    from trafik_etl_modular_spark.operators.partitions import replace_partitions
+
+    path = str(tmp_path / "assigned")
+    spark.range(40).select(
+        F.col("id").alias("vec_id"), (F.col("id") % 4).cast("int").alias("ivf_bucket")
+    ).write.partitionBy("ivf_bucket").parquet(path)
+    before = _listing(path)
+
+    def check(vec_id):
+        if vec_id == 13:
+            raise ValueError("bad row")
+        return vec_id
+
+    rows = spark.read.parquet(path).withColumn(
+        "vec_id", F.udf(check, "long")("vec_id")
+    )
+    with pytest.raises(PythonException, match="bad row"):
+        replace_partitions(rows, path, "ivf_bucket", [0, 1, 2, 3])
+
+    assert _listing(path) == before
+    assert spark.read.parquet(path).count() == 40
 
 
 def test_conform_schema_repairs_drift(spark):

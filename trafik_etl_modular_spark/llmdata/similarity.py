@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from trafik_etl_modular_spark.operators.partitions import replace_partitions
+
 
 def to_double_array(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -442,17 +444,17 @@ def ivf_append(assigned_batch: DataFrame, path: str) -> None:
     Only the touched bucket directories gain files — the existing
     corpus is never rewritten and the centroid table is untouched, so
     appends are cheap and probes keep their static partition pruning.
-    The batch is repartitioned one-shuffle-partition-per-bucket first,
-    so each append adds at most one file per bucket (small-file growth
-    is O(appends·buckets), bounded by compaction cadence, not tasks).
+    The batch is hash-repartitioned on the bucket first, so each
+    bucket's rows land in one task and each append adds at most one
+    file per bucket (small-file growth is O(appends·buckets), bounded
+    by compaction cadence, not tasks).
     Drift between appends and the frozen quantizer is OBSERVABLE, not
     silent: the occupancy drift report (queries/llmdata.py::
     sim_ivf_incremental_append) flags cells whose appended share
     crosses the retrain threshold."""
-    n_buckets = assigned_batch.select("ivf_bucket").distinct().count()
-    assigned_batch.repartition(max(n_buckets, 1), "ivf_bucket").write.mode(
-        "append"
-    ).partitionBy("ivf_bucket").parquet(f"{path}/assigned")
+    assigned_batch.repartition("ivf_bucket").write.mode("append").partitionBy(
+        "ivf_bucket"
+    ).parquet(f"{path}/assigned")
 
 
 # ---------------------------------------------------------------------------
@@ -667,49 +669,36 @@ def ivf_compact(
     at or under ``max_files_per_bucket`` are never read or rewritten.
     The over-threshold buckets are read with an ``ivf_bucket IN (…)``
     filter — partition-pruned to exactly those directories — then
-    repartitioned one-shuffle-partition-per-bucket and rewritten as
-    one file each, so the rewrite I/O is proportional to the
-    COMPACTED buckets' bytes, never the index.  Vectors are copied
-    verbatim (no re-encoding), so probe results are bit-identical
-    pre/post (pytest-asserted).
+    hash-repartitioned on the bucket and rewritten as one file each,
+    so the rewrite I/O is proportional to the COMPACTED buckets'
+    bytes, never the index.  Vectors are copied verbatim (no
+    re-encoding), so probe results are bit-identical pre/post
+    (pytest-asserted).
 
-    ``out_path=None`` compacts IN PLACE: the rewritten bucket
-    directories atomically replace the originals one rename at a
-    time, so a concurrent probe sees either the old files or the new
-    single file, never a partial mix.  With ``out_path`` the
-    compacted buckets are materialized side-by-side (used by the
-    registered report query so the shared fixture index stays
-    immutable).
+    ``out_path=None`` compacts IN PLACE through
+    :func:`~trafik_etl_modular_spark.operators.partitions.replace_partitions`
+    of each over-threshold bucket's own rows: Spark's per-partition
+    commit swaps each rewritten bucket directory in at job commit, so
+    a probe listing a bucket sees its old files or its new single
+    file; the swap is per bucket, never across buckets.  With
+    ``out_path`` the compacted buckets are materialized side-by-side
+    (used by the registered report query so the shared fixture index
+    stays immutable).
 
     Returns [(bucket, files_before, files_after)] sorted by bucket,
     covering every bucket (untouched ones report unchanged counts).
     """
-    import os
-    import shutil
-    import uuid
-
     before = ivf_bucket_files(path)
     over = sorted(b for b, n in before.items() if n > max_files_per_bucket)
     dest = out_path if out_path is not None else path
     if over:
         src = spark.read.parquet(f"{path}/assigned")
-        tmp = f"{dest}/.compact-{uuid.uuid4().hex[:8]}"
-        (
-            src.filter(F.col("ivf_bucket").isin([int(b) for b in over]))
-            .repartition(len(over), "ivf_bucket")
-            .write.mode("overwrite")
-            .partitionBy("ivf_bucket")
-            .parquet(f"{tmp}/assigned")
+        replace_partitions(
+            src.filter(F.col("ivf_bucket").isin(over)),
+            f"{dest}/assigned",
+            "ivf_bucket",
+            over,
         )
-        os.makedirs(f"{dest}/assigned", exist_ok=True)
-        for b in over:
-            new_dir = f"{tmp}/assigned/ivf_bucket={b}"
-            cur_dir = f"{dest}/assigned/ivf_bucket={b}"
-            if os.path.exists(cur_dir):  # in-place: swap old dir out
-                trash = f"{tmp}/old-{b}"
-                os.rename(cur_dir, trash)
-            os.rename(new_dir, cur_dir)
-        shutil.rmtree(tmp, ignore_errors=True)
     after_dest = ivf_bucket_files(dest) if over else {}
     report = []
     for b in sorted(before):
@@ -737,22 +726,19 @@ def ivf_purge(
     index semi-joined to the (broadcast) tombstone set — column-
     pruned, never the vectors.  ONLY those buckets are rewritten
     (partition-pruned ``ivf_bucket IN (…)`` read, anti-join against
-    the tombstones, one shuffle partition per bucket, one file each);
+    the tombstones, hash-repartitioned on the bucket, one file each);
     untouched buckets are never read.  A bucket whose every vector is
     tombstoned disappears from the layout entirely (directory-level
     retirement, the zero-count rule of the signed-fold family).
 
-    ``out_path=None`` purges IN PLACE with the same atomic directory
-    swap as :func:`ivf_compact`; with ``out_path`` the purged buckets
+    ``out_path=None`` purges IN PLACE through the same per-bucket
+    :func:`~trafik_etl_modular_spark.operators.partitions.replace_partitions`
+    as :func:`ivf_compact`; with ``out_path`` the purged buckets
     materialize side-by-side (the registered report query uses this
     so the shared fixture index stays immutable).
 
     Returns [(bucket, n_tombstoned)] for touched buckets, sorted.
     """
-    import os
-    import shutil
-    import uuid
-
     src = spark.read.parquet(f"{path}/assigned")
     tomb = tombstones.select(F.col(id_col))
     touched = (
@@ -768,26 +754,14 @@ def ivf_purge(
     over = [b for b, _ in report]
     dest = out_path if out_path is not None else path
     if over:
-        tmp = f"{dest}/.purge-{uuid.uuid4().hex[:8]}"
-        (
-            src.filter(F.col("ivf_bucket").isin(over))
-            .join(F.broadcast(tomb), id_col, "left_anti")
-            .repartition(len(over), "ivf_bucket")
-            .write.mode("overwrite")
-            .partitionBy("ivf_bucket")
-            .parquet(f"{tmp}/assigned")
+        replace_partitions(
+            src.filter(F.col("ivf_bucket").isin(over)).join(
+                F.broadcast(tomb), id_col, "left_anti"
+            ),
+            f"{dest}/assigned",
+            "ivf_bucket",
+            over,
         )
-        os.makedirs(f"{dest}/assigned", exist_ok=True)
-        for b in over:
-            new_dir = f"{tmp}/assigned/ivf_bucket={b}"
-            cur_dir = f"{dest}/assigned/ivf_bucket={b}"
-            if os.path.exists(cur_dir):  # in-place: swap old dir out
-                os.rename(cur_dir, f"{tmp}/old-{b}")
-            if os.path.exists(new_dir):
-                os.rename(new_dir, cur_dir)
-            # else: the bucket was fully tombstoned — it retires from
-            # the layout (no directory at all)
-        shutil.rmtree(tmp, ignore_errors=True)
     return report
 
 

@@ -1,4 +1,4 @@
-"""Storage sink: partitioned parquet table + MERGE-style compaction
+"""Storage sink: partitioned parquet table + MERGE-style upsert
 (SURVEY.md §2.1 S5/S6 — the lakehouse replacement for SQLite DDL +
 B-tree indexes + `INSERT ... ON CONFLICT`).
 
@@ -6,46 +6,40 @@ Layout decisions (§7.1):
   * partition by `event_date = to_date(start_time_utc)` — the
     dashboard's 30-day predicate (S7) becomes partition pruning; the
     reference's `start_time_utc` B-tree index is this, for free.
-  * per-partition file sizing via repartition on the partition key
-    before write (small-file control); on Delta this would be
-    OPTIMIZE/Z-ORDER on `county_name` — parquet min/max stats give
-    data skipping on sorted columns.  The initial load and the MERGE
-    share this one partitioned write.
+  * one file per partition per write via repartition on the partition
+    key (small-file control, so no separate compaction job); on Delta
+    this would be OPTIMIZE/Z-ORDER on `county_name` — parquet min/max
+    stats give data skipping on sorted columns.
   * upsert = partition-scoped rewrite of the partitions the updates
     batch lands in plus those holding older versions of its keys
     (union + latest-wins within those), not the whole table — the
     pure-parquet equivalent of Delta `MERGE INTO`, with rewrite
     volume ∝ touched partitions, one row per key and one execution
-    of the batch.  The dynamic partition overwrite is NOT atomic.
+    of the batch.  The rewrite is `operators.partitions.
+    replace_partitions`, which is NOT atomic over plain parquet.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
-from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trafik_etl_modular_spark.operators.partitions import replace_partitions
 from trafik_etl_modular_spark.queries.dedup import latest_wins
 
 
-def _partitioned_writer(df: DataFrame) -> DataFrameWriter:
-    """The sink's one partitioned write: derive `event_date`, then one
-    shuffle to co-locate partition data (repartition on the partition
-    column so each date writes a bounded file count, not one file per
-    task)."""
-    return (
+def write_incidents(df: DataFrame, path: str) -> None:
+    """Initial load: replace the table with `df`, date-partitioned,
+    one file per date."""
+    (
         df.withColumn("event_date", F.to_date("start_time_utc"))
         .repartition(F.col("event_date"))
         .write.mode("overwrite")
         .partitionBy("event_date")
+        .parquet(path)
     )
-
-
-def write_incidents(df: DataFrame, path: str) -> None:
-    """Initial load: replace the table with `df`, date-partitioned."""
-    _partitioned_writer(df).parquet(path)
 
 
 def read_incidents(spark: SparkSession, path: str) -> DataFrame:
@@ -71,11 +65,12 @@ def merge_into_incidents(
        row there, or the table holds the key twice;
     3. read ONLY those partitions (partition pruning via the filter);
     4. union + latest-wins on the key;
-    5. dynamic-partition-overwrite those partitions, as a per-write
-       option, so a later ``write_incidents`` in the same session
-       still replaces the whole table.  Over plain parquet this is
-       NOT atomic: a crash mid-write can leave some partitions
-       rewritten and others not.
+    5. ``replace_partitions`` the rewrite set with the result, lazily
+       (the write reads the partitions it replaces; the dynamic
+       overwrite swaps them in only at job commit).  A rewrite-set
+       partition whose keys all moved to another day gets no rows and
+       is removed.  Over plain parquet this is NOT atomic: a crash
+       mid-commit can leave some partitions rewritten and others not.
     """
     upd = (
         updates.withColumn("event_date", F.to_date("start_time_utc"))
@@ -89,68 +84,12 @@ def merge_into_incidents(
     touched = [r[0] for r in dates.distinct().collect()]
     if not touched:
         return
-    parts = [os.path.join(path, f"event_date={d}") for d in touched]
-    before = {p: set(os.listdir(p)) for p in parts if os.path.isdir(p)}
 
     existing = table.filter(F.col("event_date").isin(touched)).withColumn("__src", F.lit(0))
     merged = existing.unionByName(upd, allowMissingColumns=True)
     ordering = [F.desc(c) for c in order_cols] + [F.desc("__src")]
     resolved = latest_wins(merged, [key], ordering).drop("__src")
-    # Materialize BEFORE the write — the plan reads the same path it
-    # overwrites, which Spark (rightly) refuses to run lazily.
-    resolved = resolved.localCheckpoint(eager=True)
-    _partitioned_writer(resolved).option("partitionOverwriteMode", "dynamic").parquet(path)
-    # The overwrite replaces only partitions it writes rows to, each
-    # wholesale; one still holding an old file got none because all
-    # its keys moved to another day, so it goes.
-    for part, files in before.items():
-        if files & set(os.listdir(part)):
-            shutil.rmtree(part)
-
-
-def compact_partitions(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    partitions: list | None = None,
-) -> dict:
-    """Small-file compaction (the pure-parquet OPTIMIZE): rewrite
-    each targeted `event_date` partition into ceil(bytes/target)
-    files.
-
-    Small files are the chronic failure mode of frequent MERGEs —
-    each micro-batch writes per-partition files, and a year of hourly
-    batches makes 10k-file partitions whose scan is seek-bound. The
-    rewrite is partition-scoped (same trick as the MERGE): untouched
-    partitions keep their files byte-for-byte.
-
-    Returns {partition: n_files_after} for observability.
-    """
-    import glob as _glob
-    import math
-
-    part_dirs = sorted(_glob.glob(os.path.join(path, "event_date=*")))
-    result: dict = {}
-    for d in part_dirs:
-        pval = os.path.basename(d).split("=", 1)[1]
-        if partitions is not None and pval not in partitions:
-            continue
-        files = [f for f in _glob.glob(os.path.join(d, "*.parquet"))]
-        n_bytes = sum(os.path.getsize(f) for f in files)
-        n_target = max(1, math.ceil(n_bytes / target_file_bytes))
-        if len(files) <= n_target:
-            result[pval] = len(files)
-            continue
-        part_df = spark.read.parquet(path).filter(F.col("event_date") == pval)
-        rewritten = part_df.repartition(n_target).localCheckpoint(eager=True)
-        (
-            rewritten.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("event_date")
-            .parquet(path)
-        )
-        result[pval] = n_target
-    return result
+    replace_partitions(resolved, path, "event_date", touched)
 
 
 def conform_schema(df: DataFrame, ddl: str) -> DataFrame:

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from trafik_etl_modular_spark.operators.partitions import publish_dir
 from trafik_etl_modular_spark.queries.common import t
 from trafik_etl_modular_spark.registry import query
 
@@ -288,7 +289,6 @@ def ensure_edge_table(spark, sf_dir: str) -> str:
     atomic tmp-dir rename the IVF index uses."""
     import hashlib
     import os
-    import shutil
     from urllib.parse import urlparse
 
     def _fp(name: str) -> str:
@@ -353,10 +353,7 @@ def ensure_edge_table(spark, sf_dir: str) -> str:
             },
             f,
         )
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost a benign race
+    publish_dir(tmp, path)
     return path
 
 

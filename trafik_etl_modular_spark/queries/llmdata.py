@@ -64,6 +64,7 @@ from trafik_etl_modular_spark.llmdata.text import (
 )
 from trafik_etl_modular_spark.functions.scalars import fquant, oracle_fquant
 from trafik_etl_modular_spark.operators.grouped import percent_rank_by_group
+from trafik_etl_modular_spark.operators.partitions import publish_dir
 from trafik_etl_modular_spark.queries.common import t
 from trafik_etl_modular_spark.registry import query
 
@@ -1802,7 +1803,6 @@ def _ivf_ensure_index(spark, sf_dir: str):
     the rename race, its (identical: same data, fixed seed) index is
     used and ours is discarded.  Once a path exists it is immutable."""
     import os
-    import shutil
 
     path = _ivf_index_path(spark, sf_dir)
     key = (id(spark), path)
@@ -1813,11 +1813,7 @@ def _ivf_ensure_index(spark, sf_dir: str):
         emb = t(spark, sf_dir, "embeddings")
         assigned, centroids = ivf_index(emb, n_centroids=16)
         ivf_write_index(assigned, centroids, tmp)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        try:
-            os.rename(tmp, path)
-        except OSError:  # lost the race — the winner's index is identical
-            shutil.rmtree(tmp, ignore_errors=True)
+        publish_dir(tmp, path)
     # The assigned corpus is read through Spark (it IS the data the
     # probe scans, bucket-partition-pruned).  The centroid table is
     # k rows of index METADATA on driver-reachable storage — read it
@@ -2352,7 +2348,6 @@ def _ivf_ensure_appended_index(spark, sf_dir: str) -> str:
     share one deterministic artifact and the appended layout stays
     inspectable next to its compacted form."""
     import os
-    import shutil
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -2388,11 +2383,7 @@ def _ivf_ensure_appended_index(spark, sf_dir: str) -> str:
         ),
         f"{tmp}/report.parquet",
     )
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    try:
-        os.rename(tmp, path)
-    except OSError:  # lost the build race — the winner's artifact is identical
-        shutil.rmtree(tmp, ignore_errors=True)
+    publish_dir(tmp, path)
     return path
 
 
@@ -2610,7 +2601,6 @@ def _ivf_ensure_purged_index(spark, sf_dir: str) -> tuple[str, str]:
     atomic-rename like `_ivf_ensure_appended_index`.  Returns
     (appended_path, purged_path)."""
     import os
-    import shutil
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -2639,11 +2629,7 @@ def _ivf_ensure_purged_index(spark, sf_dir: str) -> tuple[str, str]:
         ),
         f"{tmp}/report.parquet",
     )
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    try:
-        os.rename(tmp, path)
-    except OSError:  # lost the build race — the winner's artifact is identical
-        shutil.rmtree(tmp, ignore_errors=True)
+    publish_dir(tmp, path)
     return apath, path
 
 
@@ -4740,7 +4726,6 @@ def _ivf_ensure_pq(spark, sf_dir: str):
     same content-keyed tmp-then-atomic-rename pattern as
     :func:`_ivf_ensure_index`.  Returns (path, codebooks ndarray)."""
     import os
-    import shutil
 
     import numpy as np
     import pyarrow as pa
@@ -4781,11 +4766,7 @@ def _ivf_ensure_pq(spark, sf_dir: str):
         os.makedirs(f"{tmp}/codebooks", exist_ok=True)
         pq.write_table(table, f"{tmp}/codebooks/part-00000.parquet")
         open(f"{tmp}/codebooks/_SUCCESS", "w").close()
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        try:
-            os.rename(tmp, path)
-        except OSError:  # lost the build race — the winner's artifact is identical
-            shutil.rmtree(tmp, ignore_errors=True)
+        publish_dir(tmp, path)
     ctbl = pq.read_table(f"{path}/codebooks")
     m = max(ctbl["subspace"].to_pylist()) + 1
     k = max(ctbl["code"].to_pylist()) + 1
