@@ -94,6 +94,35 @@ def test_empty_feed_warns_no_rows_ingested(spark, feed_dir, tmp_path):
     assert report["warnings"] == ["no rows ingested"]
 
 
+def test_malformed_page_becomes_a_warning(spark, tmp_path):
+    """A page cut off mid-Situation is one corrupt record: the report
+    warns, and the good pages still land."""
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    for p in range(1, 4):
+        (feed / f"page_{p:03d}.xml").write_text(PAGE_TMPL.format(p=p))
+    (feed / "page_004.xml").write_text(PAGE_TMPL.format(p=4)[:300])
+    report = run_etl(spark, str(feed), str(tmp_path / "incidents"), make_county_dim(spark))
+    assert report["rows"] == 6 and report["batch_rows"] == 6
+    assert report["warnings"][0] == "1 malformed feed record(s) skipped"
+    assert "row volume 6 below expected minimum 50" in report["warnings"]
+
+
+def test_etl_reads_only_xml_pages(spark, feed_dir, tmp_path):
+    """Only `*.xml` files are pages: a stray file holding a valid page
+    under another name is not read."""
+    sink = str(tmp_path / "incidents")
+    dim = make_county_dim(spark)
+    run_etl(spark, feed_dir, sink, dim)
+
+    stray = tmp_path / "stray_feed"
+    stray.mkdir()
+    (stray / "page_001.xml.partial").write_text(PAGE_TMPL.format(p=1))
+    report = run_etl(spark, str(stray), sink, dim)
+    assert report["rows"] == 8 and report["batch_rows"] == 0
+    assert report["warnings"] == ["no rows ingested"]
+
+
 def test_metrics_listener_and_notifier(spark, tmp_path):
     """§2.9 run observability: the StreamingQueryListener emits the
     reference's start/progress/done notifications with row counts,

@@ -7,11 +7,17 @@ from __future__ import annotations
 import pytest
 
 from trafik_etl_modular_spark.pipelines.ingest import (
+    feed_to_flat,
     flatten_situations,
     ingest,
     make_county_dim,
     make_situations_fixture,
+    normalize_incidents,
+    read_feed,
 )
+from trafik_etl_modular_spark.sources.xml_feed import register_xml_feed
+
+from tests.test_sources import PAGE_TMPL
 
 NOW = "2024-01-16 00:00:00"
 
@@ -89,3 +95,69 @@ def test_status_rank_column(result):
     assert ranks["D7"] == 0  # starts 01-14 < now, NULL end → PÅGÅR
     assert ranks["D6"] == 0  # starts 01-13 < now, open-ended → PÅGÅR
     assert ranks["D8"] == 1  # starts 01-25 > now → KOMMANDE
+
+
+# One Situation with the feed's awkward fields: a Deviation without an
+# Id (id fallback), an empty <Id/> and <Message/>, two CountyNo
+# elements, a non-numeric CountyNo and a StartTime padded with spaces.
+EDGE_PAGE = """<Response><Situation>
+  <Id>SE</Id><ModifiedTime>2024-01-11T08:00:00Z</ModifiedTime>
+  <PublicationTime>2024-01-11T07:00:00Z</PublicationTime>
+  <Deviation><Message>No id</Message><CountyNo>x9</CountyNo>
+    <StartTime>2024-01-11T00:00:00Z</StartTime></Deviation>
+  <Deviation><Id/><Message/><CountyNo>3</CountyNo><CountyNo>5</CountyNo>
+    <StartTime>2024-01-12T00:00:00Z</StartTime></Deviation>
+  <Deviation><Id>E3</Id><Message>Padded start</Message><CountyNo>12</CountyNo>
+    <StartTime>  2024-01-13T00:00:00Z </StartTime>
+    <Geometry><WGS84>POINT (1.5 2.5)</WGS84></Geometry></Deviation>
+</Situation></Response>"""
+
+
+@pytest.fixture(scope="module")
+def feed_dir(tmp_path_factory):
+    d = tmp_path_factory.mktemp("ingest_feed")
+    for p in range(1, 5):
+        (d / f"page_{p:03d}.xml").write_text(PAGE_TMPL.format(p=p))
+    (d / "page_005.xml").write_text(EDGE_PAGE)
+    return str(d)
+
+
+def test_read_feed_matches_python_source_field_by_field(spark, feed_dir):
+    """The built-in XML reader, flattened, yields exactly the rows the
+    Python `xml_feed` source yields, on the test pages and on the edge
+    page: a bad CountyNo NULLs that field, never the whole Situation."""
+    register_xml_feed(spark)
+    python = feed_to_flat(spark.read.format("xml_feed").option("path", feed_dir).load())
+    builtin = flatten_situations(read_feed(spark, feed_dir, 20))
+    assert builtin.count() == 11  # 4 pages × 2 + the edge page's 3
+    assert python.exceptAll(builtin).count() == 0
+    assert builtin.exceptAll(python).count() == 0
+    got = {r["incident_id"]: r["county_no"] for r in builtin.filter("situation_id = 'SE'").collect()}
+    assert got == {"SE:2024-01-11T00:00:00Z": None, "": 3, "E3": 12}
+
+
+def test_read_feed_takes_first_pages_in_name_order(spark, feed_dir):
+    sids = {r["Id"] for r in read_feed(spark, feed_dir, 2).collect()}
+    assert sids == {"S1A", "S1B", "S2A", "S2B"}
+
+
+def test_county_dim_is_a_local_relation(spark):
+    """The dimension is a JVM literal: no Python RDD behind it, so
+    broadcasting it starts no Python worker."""
+    dim = make_county_dim(spark)
+    analyzed = dim._jdf.queryExecution().analyzed().toString()
+    assert "LocalRelation" in analyzed and "LogicalRDD" not in analyzed
+    assert dim.dtypes == [("county_no", "int"), ("county_name", "string")]
+    assert dim.count() == 21
+
+
+def test_feed_to_normalize_plan_has_no_python_node(spark, feed_dir):
+    """read_feed → flatten → normalize (with the dimension join) plans
+    no Python scan or Python UDF evaluation."""
+    inc = normalize_incidents(
+        flatten_situations(read_feed(spark, feed_dir, 20)), make_county_dim(spark), NOW
+    )
+    for df in (read_feed(spark, feed_dir, 20), inc):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        for node in ("PythonScan", "BatchEvalPython", "ArrowEvalPython", "ExistingRDD"):
+            assert node not in plan, plan

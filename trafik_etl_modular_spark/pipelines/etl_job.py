@@ -4,7 +4,9 @@
 the reference accidentally split in two).
 
 Reference lifecycle reproduced end-to-end:
-  extract   — paginated XML feed via the Python Data Source (S1–S4)
+  extract   — the first max_pages XML pages via Spark's built-in XML
+              reader (ingest.read_feed, S1/S3), flattened; a page that
+              does not parse becomes a report warning, not a failure
   transform — normalize_incidents: status, geo, dim join, W1+W2 dedup
   load      — partition-scoped MERGE into the date-partitioned table
               (S5/S6; idempotent — re-running the same feed is a
@@ -23,17 +25,21 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from trafik_etl_modular_spark.constants import NOW_UTC
-from trafik_etl_modular_spark.pipelines.ingest import feed_to_flat, normalize_incidents
+# feed_to_flat is re-exported: perfbench/workloads.py imports it from here.
+from trafik_etl_modular_spark.pipelines.ingest import (  # noqa: F401
+    feed_to_flat,
+    ingest,
+    read_feed,
+)
 from trafik_etl_modular_spark.pipelines.sink import (
     conform_schema,
     merge_into_incidents,
     read_incidents,
 )
-from trafik_etl_modular_spark.sources.xml_feed import register_xml_feed
 from trafik_etl_modular_spark.streaming.observability import check_row_volume
 
 # The 13-column public schema (reference load_sqlite.py:6-41 — DDL +
@@ -60,14 +66,13 @@ def run_etl(
 ) -> dict:
     """Run the full ETL once; return the run report."""
     t0 = time.perf_counter()
-    register_xml_feed(spark)
-    raw = (
-        spark.read.format("xml_feed")
-        .option("path", feed_dir)
-        .option("maxPages", str(max_pages))
-        .load()
+    # Pages that do not parse are counted on the raw read, in the
+    # MERGE's one execution of the batch; their good neighbours land.
+    feed_obs = Observation("feed_pages")
+    raw = read_feed(spark, feed_dir, max_pages).observe(
+        feed_obs, F.count("_corrupt_record").alias("corrupt_records")
     )
-    inc = normalize_incidents(feed_to_flat(raw), county_dim, now)
+    inc = ingest(raw, county_dim, now)
     # schema enforcement at the write boundary: source drift becomes
     # typed NULLs (caught by the anomaly band), never a corrupt table
     updates = conform_schema(inc, INCIDENTS_DDL)
@@ -77,8 +82,6 @@ def run_etl(
     # (at 100 TB a second pass over the batch is real money).  The
     # dashboard KPI below is different: it measures the PUBLISHED
     # table, so it must read the sink.
-    from pyspark.sql import Observation
-
     obs = Observation("ingest_batch")
     # coalesce inside the observe expression: SUM over an EMPTY batch
     # is NULL (not 0), and int(None) would blow up the report below.
@@ -105,6 +108,8 @@ def run_etl(
         .collect()[0]
     )
     batch_rows = int(batch_metrics.get("batch_rows") or 0)
+    corrupt = int(feed_obs.get.get("corrupt_records") or 0)
+    warnings = [f"{corrupt} malformed feed record(s) skipped"] if corrupt else []
     volume_warning = check_row_volume(batch_rows, expect_min_rows, expect_max_rows)
     return {
         "rows": kpi["rows"],
@@ -113,5 +118,5 @@ def run_etl(
         "batch_rows": batch_rows,
         "batch_null_coords": int(batch_metrics.get("batch_null_coords") or 0),
         "seconds": round(time.perf_counter() - t0, 2),
-        "warnings": [volume_warning] if volume_warning else [],
+        "warnings": warnings + ([volume_warning] if volume_warning else []),
     }

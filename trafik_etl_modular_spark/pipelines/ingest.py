@@ -6,11 +6,15 @@ The upstream feed is hierarchical: `Situation` (1) → `Deviation` (N)
 times in pandas (/root/reference/src/trv/endpoints.py:107-163,
 etl_runner.py:81-134, transform.py:49-103) with subtly different
 semantics; this is the ONE parameterized pipeline (SURVEY.md §3.2
-note).  The flat-row typing (`feed_to_flat`) is shared with
-`etl_job.run_etl`: the XML feed source yields Deviation rows already
-flat, and `flatten_situations` explodes the nested frame into the
-same column names first, so both paths type and normalize alike.
-Expressed as explode + narrow column transforms:
+note).  `run_etl` reads pages with :func:`read_feed`: Spark's
+built-in XML reader, one row per Situation, no Python worker.  A page
+that does not parse becomes one `_corrupt_record` row, which
+`run_etl` counts into a report warning.  `flatten_situations` then
+explodes the Situations into the flat columns that the Python
+`xml_feed` source yields; that source still feeds streaming and is the
+reference `read_feed` is tested against.  Both end in the one flat-row
+typing, `feed_to_flat`.  Expressed as explode + narrow column
+transforms:
 
   * inner explode (Situations with no Deviations are skipped — both
     reference paths do this, endpoints.py:121, etl_runner.py:94-96)
@@ -18,7 +22,9 @@ Expressed as explode + narrow column transforms:
     each child row — free in Spark's select
   * id fallback: Deviation.Id, else situation_id:StartTime
     (transform.py:62)
-  * CountyNo arrives as a LIST → element_at(...,1) (transform.py:79-80)
+  * CountyNo arrives as a LIST → element_at(...,1) (transform.py:79-80);
+    the feed reads it as TEXT and try_casts the first element, so a
+    non-numeric CountyNo nulls that field, not the whole Situation
   * ISO-8601 'Z' strings → UTC timestamps, NULL on garbage (F1)
   * WKT POINT → (lat, lon) via regexp; non-POINT geometries fall to
     the pandas-UDF centroid only when shapely is present (F5), else
@@ -28,6 +34,8 @@ Expressed as explode + narrow column transforms:
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,23 +49,42 @@ from trafik_etl_modular_spark.functions.scalars import (
 )
 from trafik_etl_modular_spark.queries.dedup import latest_wins
 
-SITUATION_SCHEMA = """
+_SITUATION = """
     Id string, ModifiedTime string, PublicationTime string,
     Deviation array<struct<
         Id: string, Message: string, MessageType: string,
         LocationDescriptor: string, RoadNumber: string,
-        CountyNo: array<int>, StartTime: string, EndTime: string,
+        CountyNo: array<{county}>, StartTime: string, EndTime: string,
         Geometry: struct<WGS84: string>
     >>
 """
+SITUATION_SCHEMA = _SITUATION.format(county="int")
+# The feed as the XML reader parses it.  CountyNo stays text: typed
+# `int`, one non-numeric value would mark the whole Situation corrupt
+# and drop all its Deviations.  A page that does not parse lands as one
+# all-NULL row carrying `_corrupt_record` (PERMISSIVE mode).
+FEED_SCHEMA = _SITUATION.format(county="string") + ", _corrupt_record string"
+
+
+def read_feed(spark: SparkSession, feed_dir: str, max_pages: int) -> DataFrame:
+    """S1 — the first ``max_pages`` ``*.xml`` pages of ``feed_dir`` in
+    name order (the Python source's page selection), one row per
+    Situation, parsed by Spark's built-in XML reader."""
+    pages = sorted(f for f in os.listdir(feed_dir) if f.endswith(".xml"))[:max_pages]
+    return (
+        spark.read.format("xml")
+        .option("rowTag", "Situation")
+        .schema(FEED_SCHEMA)
+        .load([os.path.join(feed_dir, f) for f in pages])
+    )
 
 
 def feed_to_flat(raw: DataFrame) -> DataFrame:
     """Type the feed's flat Deviation rows into the normalize
     pipeline's input contract: ISO-8601 strings → UTC timestamps,
     trimmed text, and the reference's id-fallback rule
-    (transform.py:62).  The one flat-row typing: the XML feed source
-    (``run_etl``) and :func:`flatten_situations` both end here."""
+    (transform.py:62).  The one flat-row typing: the Python XML feed
+    source and :func:`flatten_situations` (``run_etl``) both end here."""
     return raw.select(
         F.col("situation_id"),
         parse_iso_utc("modified_time").alias("modified_time_utc"),
@@ -94,7 +121,7 @@ def flatten_situations(raw: DataFrame) -> DataFrame:
             "d.MessageType AS message_type",
             "d.LocationDescriptor AS location_descriptor",
             "d.RoadNumber AS road_number",
-            "element_at(d.CountyNo, 1) AS county_no",
+            "try_cast(element_at(d.CountyNo, 1) AS int) AS county_no",
             "d.StartTime AS start_time",
             "d.EndTime AS end_time",
             "d.Geometry.WGS84 AS wgs84",
@@ -253,7 +280,9 @@ def make_situations_fixture(spark: SparkSession) -> DataFrame:
 
 def make_county_dim(spark: SparkSession) -> DataFrame:
     """21-entry county dimension (reference COUNTY_MAP,
-    transform.py:11-16 — numbers 1-25 with gaps {2,11,15,16})."""
+    transform.py:11-16 — numbers 1-25 with gaps {2,11,15,16}), as a
+    local relation: a JVM-side literal, so broadcasting it runs no
+    Python task (``createDataFrame`` would scan a pickled Python RDD)."""
     county_map = {
         1: "Stockholms län", 3: "Uppsala län", 4: "Södermanlands län",
         5: "Östergötlands län", 6: "Jönköpings län", 7: "Kronobergs län",
@@ -263,6 +292,5 @@ def make_county_dim(spark: SparkSession) -> DataFrame:
         20: "Dalarnas län", 21: "Gävleborgs län", 22: "Västernorrlands län",
         23: "Jämtlands län", 24: "Västerbottens län", 25: "Norrbottens län",
     }
-    return spark.createDataFrame(
-        [(k, v) for k, v in county_map.items()], "county_no int, county_name string"
-    )
+    values = ", ".join(f"({k}, '{v}')" for k, v in county_map.items())
+    return spark.sql(f"SELECT * FROM VALUES {values} AS dim(county_no, county_name)")

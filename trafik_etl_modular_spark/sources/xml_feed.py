@@ -19,6 +19,13 @@ come from a directory of XML files (the landing-zone pattern — in
 production a fetcher daemon writes the same files and Spark
 Auto-Loader-style streams them).  The XML parse + flatten + cursor
 semantics are the real thing.
+
+This is the streaming source and the source of the registered
+`source_xml_feed_*` queries.  The batch ETL (`etl_job.run_etl`) reads
+the same pages with Spark's built-in XML reader instead
+(`pipelines/ingest.py::read_feed`), so it starts no Python worker;
+this module is the reference that reader's flattened rows are tested
+against, field by field.
 """
 
 from __future__ import annotations
