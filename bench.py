@@ -135,10 +135,10 @@ def main() -> int:
         ensure_edge_table(spark, sf_dir)
         warm_sf = "/root/testdata/sf0.001"
         REGISTRY["source_xml_feed_roundtrip"].fn(spark, warm_sf).count()
-        # The STREAMING side of the Python DataSource forks its own
-        # driver-side runner (offset bookkeeping) — a separate lazily
-        # loaded path from the batch scan; warming it at sf0.001 keeps
-        # ~2.3 s of one-time machinery out of the measured query.
+        # The feed STREAM (Spark's XML file source into a memory sink)
+        # is the first stream of the process: warming it at sf0.001
+        # keeps the one-time streaming machinery (query start, temp
+        # checkpoint, XML format load) out of the measured query.
         REGISTRY["source_xml_feed_stream"].fn(spark, warm_sf).count()
         REGISTRY["streaming_sessionize_stateful"].fn(spark, warm_sf).count()
     except Exception:  # noqa: BLE001 — warmup failures surface in the query itself

@@ -48,13 +48,15 @@ def test_rows_only_queries_are_documented():
 
 
 @pytest.mark.parametrize("name", sorted(E.queries()))
-def test_query_analyzes(spark, sf_dir, name):
+def test_query_analyzes(registry_plans, sf_dir, name):
     """Every query must at least pass Catalyst analysis (schema
-    resolution) against the fixture — no execution."""
+    resolution) against the fixture — no execution.  The build is the
+    run's one plan of the query, shared with the registry-wide plan
+    tests."""
     if name.startswith("streaming_"):
         pytest.skip("streaming queries execute eagerly; covered by test_query_executes")
-    df = E.queries()[name](spark, sf_dir)
-    assert df.schema is not None and len(df.columns) > 0
+    planned = registry_plans(sf_dir)[name]
+    assert planned.schema is not None and len(planned.schema.names) > 0
 
 
 @pytest.mark.parametrize("name", sorted(E.queries()))

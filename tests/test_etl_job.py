@@ -94,6 +94,20 @@ def test_empty_feed_warns_no_rows_ingested(spark, feed_dir, tmp_path):
     assert report["warnings"] == ["no rows ingested"]
 
 
+def test_empty_feed_into_new_sink_reports_zero(spark, tmp_path):
+    """A first run that ingests nothing publishes no table, and its
+    report reads zero rather than failing on the missing sink."""
+    empty = tmp_path / "empty_feed"
+    empty.mkdir()
+    (empty / "page_001.xml").write_text("<Response></Response>")
+    sink = tmp_path / "incidents"
+    report = run_etl(spark, str(empty), str(sink), make_county_dim(spark))
+    assert report["rows"] == report["pagar"] == report["kommande"] == 0
+    assert report["batch_rows"] == 0
+    assert report["warnings"] == ["no rows ingested"]
+    assert not sink.exists()
+
+
 def test_malformed_page_becomes_a_warning(spark, tmp_path):
     """A page cut off mid-Situation is one corrupt record: the report
     warns, and the good pages still land."""

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 
 from trafik_etl_modular_spark.pipelines.ingest import (
+    feed_reader,
     feed_to_flat,
     flatten_situations,
     ingest,
@@ -125,15 +126,55 @@ def feed_dir(tmp_path_factory):
 def test_read_feed_matches_python_source_field_by_field(spark, feed_dir):
     """The built-in XML reader, flattened, yields exactly the rows the
     Python `xml_feed` source yields, on the test pages and on the edge
-    page: a bad CountyNo NULLs that field, never the whole Situation."""
+    page: a bad CountyNo NULLs that field, never the whole Situation.
+    So does the same reader streamed over Spark's file source."""
     register_xml_feed(spark)
     python = feed_to_flat(spark.read.format("xml_feed").option("path", feed_dir).load())
     builtin = flatten_situations(read_feed(spark, feed_dir, 20))
     assert builtin.count() == 11  # 4 pages × 2 + the edge page's 3
-    assert python.exceptAll(builtin).count() == 0
-    assert builtin.exceptAll(python).count() == 0
+    q = (
+        flatten_situations(feed_reader(spark.readStream).load(feed_dir))
+        .writeStream.format("memory")
+        .queryName("feed_parity_stream")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination()
+        source = q.lastProgress["sources"][0]["description"]
+    finally:
+        q.stop()
+    assert source.startswith("FileStreamSource"), source
+    streamed = spark.sql("SELECT * FROM feed_parity_stream")
+    for other in (builtin, streamed):
+        assert python.exceptAll(other).count() == 0
+        assert other.exceptAll(python).count() == 0
     got = {r["incident_id"]: r["county_no"] for r in builtin.filter("situation_id = 'SE'").collect()}
     assert got == {"SE:2024-01-11T00:00:00Z": None, "": 3, "E3": 12}
+
+
+def test_feed_stream_query_matches_batch_and_leaves_no_checkpoint(spark, sf_dir):
+    """The registered stream query delivers the Python batch source's
+    rows and leaves no checkpoint directory behind."""
+    import glob
+    import tempfile
+
+    from trafik_etl_modular_spark.queries.source_feed import (
+        source_xml_feed_roundtrip,
+        source_xml_feed_stream,
+    )
+
+    def checkpoint_dirs():
+        tmp = tempfile.gettempdir()
+        return set(glob.glob(f"{tmp}/feed_stream_ckpt_*") + glob.glob(f"{tmp}/temporary-*"))
+
+    before = checkpoint_dirs()
+    streamed = source_xml_feed_stream(spark, sf_dir)
+    assert checkpoint_dirs() <= before
+    batch = source_xml_feed_roundtrip(spark, sf_dir)
+    assert streamed.count() == batch.count() > 0
+    assert streamed.exceptAll(batch).count() == 0
+    assert batch.exceptAll(streamed).count() == 0
 
 
 def test_read_feed_takes_first_pages_in_name_order(spark, feed_dir):

@@ -85,17 +85,18 @@ def test_oracle_type_surface_is_allowlisted(oracle_types):
     assert not offenders, f"oracle emits non-allowlisted output type: {offenders}"
 
 
-def test_spark_and_oracle_column_names_match(spark, oracle_types):
+def test_spark_and_oracle_column_names_match(registry_plans, oracle_types):
     """Alias drift is the #1 driver hash-mismatch class (the compare
     sorts columns BY NAME before hashing): catch it at plan time, per
     query, instead of at sweep time.  Streaming / Python-source
     queries execute eagerly and are covered by the sweep instead."""
     _load_all()
+    plans = registry_plans(DRIVER_SF_DIR)
     mismatches = {}
     for name, cols in oracle_types.items():
         if name.startswith(("streaming_", "source_xml")):
             continue
-        df = REGISTRY[name].fn(spark, DRIVER_SF_DIR)
-        if sorted(df.columns) != sorted(cols):
-            mismatches[name] = (sorted(df.columns), sorted(cols))
+        columns = plans[name].schema.names
+        if sorted(columns) != sorted(cols):
+            mismatches[name] = (sorted(columns), sorted(cols))
     assert not mismatches, f"Spark/oracle column-name drift: {mismatches}"

@@ -396,7 +396,7 @@ def test_graph_gated_path_values_match_broadcast_path(spark, sf_dir):
     assert pr_b == pr_s  # dsum makes the sums order-independent, so exact
 
 
-def test_registry_wide_global_window_invariant(spark, sf_dir):
+def test_registry_wide_global_window_invariant(registry_plans, sf_dir):
     """No registered query may plan an UNPARTITIONED Window over
     unbounded input (r06 verdict ask #5): the benign cases
     (vocab_coverage_curve etc.) sit above an Aggregate/Limit that
@@ -404,20 +404,19 @@ def test_registry_wide_global_window_invariant(spark, sf_dir):
     that from a docstring claim into a guarded invariant — a future
     query accidentally running a global row_number over a fact table
     fails the suite, not the cluster."""
-    from trafik_etl_modular_spark.plans.audit import unbounded_global_windows
-
     _load_all()
+    plans = registry_plans(sf_dir)
     bad = []
     for name in sorted(REGISTRY):
         if name.startswith(("streaming_", "source_xml")):
             continue  # execute eagerly / Python data source
-        violations = unbounded_global_windows(REGISTRY[name].fn(spark, sf_dir))
+        violations = plans[name].global_windows
         if violations:
             bad.append((name, violations))
     assert not bad, bad
 
 
-def test_registry_wide_plan_hygiene(spark, sf_dir):
+def test_registry_wide_plan_hygiene(registry_plans, sf_dir):
     """Every registered query's plan, audited at once: no cartesian
     product, and no Python-on-executor node of ANY type (row UDF,
     pandas UDF, mapInPandas, applyInPandas, mapInArrow — the full
@@ -429,9 +428,8 @@ def test_registry_wide_plan_hygiene(spark, sf_dir):
     single probe vector / corpus-size N) joined map-side to the
     corpus, which is O(n) work and shuffle-free; both allowlists are
     explicit so a new accidental node fails loudly."""
-    from trafik_etl_modular_spark.plans.audit import python_nodes
-
     _load_all()
+    plans = registry_plans(sf_dir)
     # The ONLY queries allowed to run Python on executors, with the
     # exact node type each is allowed to plan.  Everything else must
     # stay JVM-side (SURVEY §2.10: built-ins first, Arrow batches only
@@ -616,12 +614,12 @@ def test_registry_wide_plan_hygiene(spark, sf_dir):
     for name in sorted(REGISTRY):
         if name.startswith(("streaming_", "source_xml")):
             continue  # execute eagerly / Python data source
-        s = _explain(REGISTRY[name].fn(spark, sf_dir), "simple")
-        if "CartesianProduct" in s:
+        planned = plans[name]
+        if planned.cartesian:
             bad.append((name, "cartesian"))
-        if "BroadcastNestedLoopJoin" in s and name not in broadcast_scalar_ok:
+        if planned.bnlj and name not in broadcast_scalar_ok:
             bad.append((name, "bnlj"))
-        pn = set(python_nodes(s))
+        pn = set(planned.python_nodes)
         unexpected = pn - arrow_batch_ok.get(name, set())
         if unexpected:
             bad.append((name, f"python nodes {sorted(unexpected)}"))

@@ -174,14 +174,22 @@ def test_watermark_lateness_listener_capture(spark):
     """The MetricsListener surfaces the same per-batch dropped-late
     counts the report is built from, and flags the late batch with a
     warning — the row-volume guard's event-time sibling is live, not
-    just post-hoc."""
+    just post-hoc.  The run leaves no checkpoint directory behind."""
+    import glob
+    import tempfile
     import time
 
     from trafik_etl_modular_spark.streaming.observability import MetricsListener
     from trafik_etl_modular_spark.streaming.pipeline import watermark_lateness_run
 
+    def checkpoint_dirs():
+        tmp = tempfile.gettempdir()
+        return set(glob.glob(f"{tmp}/late_audit_ckpt_*") + glob.glob(f"{tmp}/temporary-*"))
+
+    before = checkpoint_dirs()
     listener = MetricsListener()
     out = watermark_lateness_run(spark, SF, listener=listener).collect()
+    assert checkpoint_dirs() <= before
     assert sum(r["n_dropped_late"] for r in out) > 0
     assert all(r["n_admitted"] > 0 for r in out)
 

@@ -1,5 +1,6 @@
-"""Python Data Source + UDTF paginated XML feed (SURVEY.md S1-S4/U4)
-and the partitioned sink with MERGE compaction (S5/S6)."""
+"""Python Data Source + UDTF paginated XML feed (SURVEY.md S1-S4/U4),
+the feed as a stream over Spark's XML file source, and the partitioned
+sink with MERGE compaction (S5/S6)."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from trafik_etl_modular_spark.pipelines.ingest import feed_reader
 from trafik_etl_modular_spark.sources.xml_feed import (
     fetch_with_retry,
     make_pages_udtf,
@@ -371,46 +373,54 @@ def test_datasource_filter_pushdown_prunes_pages(spark, feed_dir):
     }
 
 
+def _page_stream(spark, feed, **options):
+    """The feed as a file-source stream (the engine's reader), one row
+    per Deviation, tagged with the page file it came from."""
+    raw = feed_reader(spark.readStream).options(**options).load(str(feed))
+    return raw.select(
+        F.col("_metadata.file_name").alias("page"),
+        F.explode("Deviation.Id").alias("deviation_id"),
+    )
+
+
+def _stream_to_parquet(spark, feed, ckpt, out_dir):
+    q = (
+        _page_stream(spark, feed)
+        .writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
 def test_stream_reader_incremental_offsets(spark, tmp_path):
-    """Streaming DataSource: offset == pages consumed. A restarted
-    query with the same checkpoint resumes at the committed page —
-    newly landed pages arrive as a NEW micro-batch, old pages are
-    never re-read (exactly-once incremental ingest, the scale form of
-    the reference's cursor pagination)."""
+    """Streaming feed read: the offset is the file source's log of
+    pages already seen.  A restarted query with the same checkpoint
+    resumes there — newly landed pages arrive as a NEW micro-batch,
+    old pages are never re-read (exactly-once incremental ingest, the
+    scale form of the reference's cursor pagination)."""
     feed = tmp_path / "feed"
     feed.mkdir()
-    for p in range(1, 4):  # pages 0-2
+    for p in range(1, 4):
         (feed / f"page_{p:03d}.xml").write_text(PAGE_TMPL.format(p=p))
-    register_xml_feed(spark)
     ckpt = str(tmp_path / "ckpt")
     out_dir = str(tmp_path / "out")
 
-    def run_once():
-        q = (
-            spark.readStream.format("xml_feed")
-            .option("path", str(feed))
-            .load()
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    run_once()
+    _stream_to_parquet(spark, feed, ckpt, out_dir)
     first = spark.read.parquet(out_dir)
     assert first.count() == 6  # 3 pages × 2 deviations
     assert first.select("page").distinct().count() == 3
 
     # two more pages land; restart resumes from the committed offset
-    for p in range(4, 6):  # pages 3-4
+    for p in range(4, 6):
         (feed / f"page_{p:03d}.xml").write_text(PAGE_TMPL.format(p=p))
-    run_once()
+    _stream_to_parquet(spark, feed, ckpt, out_dir)
     both = spark.read.parquet(out_dir)
-    assert both.count() == 10  # +2 pages × 2 — pages 0-2 NOT re-read
+    assert both.count() == 10  # +2 pages × 2 — pages 1-3 NOT re-read
     assert both.select("page").distinct().count() == 5
     # per-page row counts prove no duplicates from the restart
     assert (
@@ -418,20 +428,51 @@ def test_stream_reader_incremental_offsets(spark, tmp_path):
     )
 
 
+def test_stream_reads_a_late_page_once_whatever_its_name(spark, tmp_path):
+    """A page that lands after pages 1-3 were committed, under a name
+    that sorts between them, is read exactly once by the restarted
+    stream, and no committed page is read again."""
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    for p in range(1, 4):
+        (feed / f"page_{p:03d}.xml").write_text(PAGE_TMPL.format(p=p))
+    ckpt = str(tmp_path / "ckpt")
+    out_dir = str(tmp_path / "out")
+    _stream_to_parquet(spark, feed, ckpt, out_dir)
+
+    (feed / "page_0015.xml").write_text(PAGE_TMPL.format(p=15))
+    _stream_to_parquet(spark, feed, ckpt, out_dir)
+    ids = [r["deviation_id"] for r in spark.read.parquet(out_dir).collect()]
+    assert len(ids) == 8 and len(set(ids)) == 8
+    assert {"D151", "D152"} <= set(ids)
+
+
+def test_stream_lands_good_pages_past_a_truncated_one(spark, tmp_path):
+    """A truncated page is a corrupt record, not a failed stream, and a
+    page under a non-`.xml` name is not read: the good pages land."""
+    from trafik_etl_modular_spark.streaming.pipeline import _run_to_memory
+
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    for p in range(1, 3):
+        (feed / f"page_{p:03d}.xml").write_text(PAGE_TMPL.format(p=p))
+    (feed / "page_003.xml.partial").write_text(PAGE_TMPL.format(p=3))
+    (feed / "page_004.xml").write_text(PAGE_TMPL.format(p=4)[:300])
+    out = _run_to_memory(_page_stream(spark, feed), "append", no_data_flush=False)
+    ids = [r["deviation_id"] for r in out.collect()]
+    assert sorted(ids) == ["D11", "D12", "D21", "D22"]
+
+
 def test_stream_reader_rate_limit_bounds_batches(spark, tmp_path):
-    """maxPagesPerTrigger caps each micro-batch: a 6-page backfill with
+    """maxFilesPerTrigger caps each micro-batch: a 6-page backfill with
     a 2-page cap needs 3 micro-batches, never one giant batch."""
     feed = tmp_path / "feed"
     feed.mkdir()
     for p in range(1, 7):
         (feed / f"page_{p:03d}.xml").write_text(PAGE_TMPL.format(p=p))
-    register_xml_feed(spark)
 
     q = (
-        spark.readStream.format("xml_feed")
-        .option("path", str(feed))
-        .option("maxPagesPerTrigger", "2")
-        .load()
+        _page_stream(spark, feed, maxFilesPerTrigger="2")
         .writeStream.format("memory")
         .queryName("feed_rate_limited")
         .option("checkpointLocation", str(tmp_path / "ckpt2"))

@@ -23,6 +23,7 @@ is the notification payload; emitting it is the caller's concern.
 
 from __future__ import annotations
 
+import os
 import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -95,18 +96,21 @@ def run_etl(
     merge_into_incidents(spark, sink_path, updates)
     batch_metrics = obs.get if obs.get else {"batch_rows": 0, "batch_null_coords": 0}
 
-    # A4 — one-pass KPI aggregation over the published table.
-    kpi = (
-        read_incidents(spark, sink_path)
-        .agg(
-            F.count("*").alias("rows"),
-            F.sum(F.when(F.col("status") == "PÅGÅR", 1).otherwise(0)).alias("pagar"),
-            F.sum(F.when(F.col("status") == "KOMMANDE", 1).otherwise(0)).alias(
-                "kommande"
-            ),
+    # A4 — one-pass KPI aggregation over the published table.  A
+    # first run that ingested nothing published no table.
+    kpi = {"rows": 0, "pagar": 0, "kommande": 0}
+    if os.path.exists(sink_path):
+        kpi = (
+            read_incidents(spark, sink_path)
+            .agg(
+                F.count("*").alias("rows"),
+                F.sum(F.when(F.col("status") == "PÅGÅR", 1).otherwise(0)).alias("pagar"),
+                F.sum(F.when(F.col("status") == "KOMMANDE", 1).otherwise(0)).alias(
+                    "kommande"
+                ),
+            )
+            .collect()[0]
         )
-        .collect()[0]
-    )
     batch_rows = int(batch_metrics.get("batch_rows") or 0)
     corrupt = int(feed_obs.get.get("corrupt_records") or 0)
     warnings = [f"{corrupt} malformed feed record(s) skipped"] if corrupt else []

@@ -6,14 +6,17 @@ The upstream feed is hierarchical: `Situation` (1) → `Deviation` (N)
 times in pandas (/root/reference/src/trv/endpoints.py:107-163,
 etl_runner.py:81-134, transform.py:49-103) with subtly different
 semantics; this is the ONE parameterized pipeline (SURVEY.md §3.2
-note).  `run_etl` reads pages with :func:`read_feed`: Spark's
-built-in XML reader, one row per Situation, no Python worker.  A page
-that does not parse becomes one `_corrupt_record` row, which
-`run_etl` counts into a report warning.  `flatten_situations` then
-explodes the Situations into the flat columns that the Python
-`xml_feed` source yields; that source still feeds streaming and is the
-reference `read_feed` is tested against.  Both end in the one flat-row
-typing, `feed_to_flat`.  Expressed as explode + narrow column
+note).  :func:`feed_reader` is the feed's one format decision:
+Spark's built-in XML reader, one row per Situation, `*.xml` pages
+only, no Python worker.  `run_etl` reads through it in batch
+(:func:`read_feed`), and `source_xml_feed_stream` as a stream over
+Spark's file source.  A page that does not parse becomes one
+`_corrupt_record` row, which `run_etl` counts into a report warning.
+:func:`explode_situations` turns the Situations into the flat
+raw-string columns that the Python `xml_feed` source yields (the
+reference both reads are tested against), and
+:func:`flatten_situations` types them with the one flat-row typing,
+:func:`feed_to_flat`.  Expressed as explode + narrow column
 transforms:
 
   * inner explode (Situations with no Deviations are skipped — both
@@ -37,8 +40,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamReader
 
 from trafik_etl_modular_spark.functions.scalars import (
     derive_status,
@@ -66,17 +70,23 @@ SITUATION_SCHEMA = _SITUATION.format(county="int")
 FEED_SCHEMA = _SITUATION.format(county="string") + ", _corrupt_record string"
 
 
+def feed_reader(reader: DataFrameReader | DataStreamReader):
+    """The feed's one format decision, for a batch or a stream read:
+    Spark's built-in XML reader, one row per Situation, over the
+    ``*.xml`` pages only."""
+    return (
+        reader.format("xml")
+        .option("rowTag", "Situation")
+        .option("pathGlobFilter", "*.xml")
+        .schema(FEED_SCHEMA)
+    )
+
+
 def read_feed(spark: SparkSession, feed_dir: str, max_pages: int) -> DataFrame:
     """S1 — the first ``max_pages`` ``*.xml`` pages of ``feed_dir`` in
-    name order (the Python source's page selection), one row per
-    Situation, parsed by Spark's built-in XML reader."""
+    name order (the Python source's page selection)."""
     pages = sorted(f for f in os.listdir(feed_dir) if f.endswith(".xml"))[:max_pages]
-    return (
-        spark.read.format("xml")
-        .option("rowTag", "Situation")
-        .schema(FEED_SCHEMA)
-        .load([os.path.join(feed_dir, f) for f in pages])
-    )
+    return feed_reader(spark.read).load([os.path.join(feed_dir, f) for f in pages])
 
 
 def feed_to_flat(raw: DataFrame) -> DataFrame:
@@ -106,27 +116,30 @@ def feed_to_flat(raw: DataFrame) -> DataFrame:
     )
 
 
-def flatten_situations(raw: DataFrame) -> DataFrame:
-    """S3 — one row per Deviation, parent fields repeated. Plain
-    (inner) explode: deviation-less Situations vanish, matching both
-    reference implementations.  The explode yields the feed source's
-    column names, so the typing is :func:`feed_to_flat`'s."""
-    return feed_to_flat(
-        raw.select("*", F.explode("Deviation").alias("d")).selectExpr(
-            "Id AS situation_id",
-            "ModifiedTime AS modified_time",
-            "PublicationTime AS publication_time",
-            "d.Id AS deviation_id",
-            "d.Message AS message",
-            "d.MessageType AS message_type",
-            "d.LocationDescriptor AS location_descriptor",
-            "d.RoadNumber AS road_number",
-            "try_cast(element_at(d.CountyNo, 1) AS int) AS county_no",
-            "d.StartTime AS start_time",
-            "d.EndTime AS end_time",
-            "d.Geometry.WGS84 AS wgs84",
-        )
+def explode_situations(raw: DataFrame) -> DataFrame:
+    """S3 — one row per Deviation, parent fields repeated, as the feed
+    source's raw-string columns.  Plain (inner) explode:
+    deviation-less Situations, and the all-NULL row of a page that
+    does not parse, vanish, matching both reference implementations."""
+    return raw.select("*", F.explode("Deviation").alias("d")).selectExpr(
+        "Id AS situation_id",
+        "ModifiedTime AS modified_time",
+        "PublicationTime AS publication_time",
+        "d.Id AS deviation_id",
+        "d.Message AS message",
+        "d.MessageType AS message_type",
+        "d.LocationDescriptor AS location_descriptor",
+        "d.RoadNumber AS road_number",
+        "try_cast(element_at(d.CountyNo, 1) AS int) AS county_no",
+        "d.StartTime AS start_time",
+        "d.EndTime AS end_time",
+        "d.Geometry.WGS84 AS wgs84",
     )
+
+
+def flatten_situations(raw: DataFrame) -> DataFrame:
+    """The explode, typed by :func:`feed_to_flat`."""
+    return feed_to_flat(explode_situations(raw))
 
 
 def normalize_incidents(

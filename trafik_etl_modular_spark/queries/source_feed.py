@@ -1,7 +1,9 @@
 """End-to-end source roundtrip: events fixture → paginated Situation
-XML pages (the TRV feed shape) → Python Data Source scan → flatten —
-oracle-checked against direct SQL over the same events, which proves
-the XML writer/parser/flatten stack loses nothing (S1–S4 parity).
+XML pages (the TRV feed shape) → flattened rows, read two ways: the
+Python Data Source in batch, and Spark's XML file source as a stream.
+Both are oracle-checked against direct SQL over the same events, which
+proves the XML writer/parser/flatten stack loses nothing (S1–S4
+parity).
 """
 
 from __future__ import annotations
@@ -12,8 +14,10 @@ from xml.sax.saxutils import escape
 
 from pyspark.sql import functions as F
 
+from trafik_etl_modular_spark.pipelines.ingest import explode_situations, feed_reader
 from trafik_etl_modular_spark.registry import query
 from trafik_etl_modular_spark.sources.xml_feed import register_xml_feed
+from trafik_etl_modular_spark.streaming.pipeline import _run_to_memory
 
 _PAGE_SIZE = 500  # reference page size (config.py:24)
 
@@ -68,6 +72,15 @@ SELECT 'S' || event_id AS situation_id,
        strftime(ts, '%Y-%m-%dT%H:%M:%SZ') AS start_time
 FROM events
 """
+_ROUNDTRIP_COLUMNS = (
+    "situation_id",
+    "modified_time",
+    "deviation_id",
+    "message",
+    "message_type",
+    "county_no",
+    "start_time",
+)
 
 
 @query("source_xml_feed_roundtrip", sql=_ROUNDTRIP_SQL, tags=("source",))
@@ -83,57 +96,20 @@ def source_xml_feed_roundtrip(spark, sf_dir):
         .option("maxPages", "100000")
         .load()
     )
-    return raw.select(
-        "situation_id",
-        "modified_time",
-        "deviation_id",
-        "message",
-        "message_type",
-        "county_no",
-        "start_time",
-    )
+    return raw.select(*_ROUNDTRIP_COLUMNS)
 
 
 @query("source_xml_feed_stream", sql=_ROUNDTRIP_SQL, tags=("source", "streaming"))
 def source_xml_feed_stream(spark, sf_dir):
-    """The same landing zone consumed through the STREAMING side of the
-    DataSource (XmlFeedStreamReader): offset = pages consumed, each
-    micro-batch's page span split across executors. Run to completion
-    here, the stream must deliver byte-identical rows to the batch
-    scan — one oracle covers both paths."""
-    import hashlib
-    import tempfile
-
-    feed_dir = ensure_feed_dir(sf_dir)
-    register_xml_feed(spark)
-    raw = (
-        spark.readStream.format("xml_feed")
-        .option("path", feed_dir)
-        .option("maxPages", "100000")
-        .load()
-    )
-    sel = raw.select(
-        "situation_id",
-        "modified_time",
-        "deviation_id",
-        "message",
-        "message_type",
-        "county_no",
-        "start_time",
-    )
-    name = f"feed_stream_{hashlib.md5(feed_dir.encode()).hexdigest()[:8]}"
-    q = (
-        sel.writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="feed_stream_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {name}")
+    """The same landing zone consumed as a STREAM through Spark's XML
+    file source (`ingest.feed_reader`, the reader `run_etl` uses): the
+    offset is the file source's log of pages already seen, and the
+    explode is the batch ETL's.  Run to completion here, the stream
+    must deliver the rows the Python batch source does — one oracle
+    covers both paths."""
+    raw = feed_reader(spark.readStream).load(ensure_feed_dir(sf_dir))
+    sel = explode_situations(raw).select(*_ROUNDTRIP_COLUMNS)
+    return _run_to_memory(sel, "append", no_data_flush=False)
 
 
 def ensure_evolved_dir(sf_dir: str) -> str:

@@ -10,22 +10,23 @@ Re-expressed Spark-natively, twice:
     Partition planning splits the page range across executors, each
     reading its own page span — the DSv2 shape where a real HTTP
     endpoint would be fetched in parallel.
-  * :func:`read_pages_udtf` — the same iterator as a **UDTF**
+  * :func:`make_pages_udtf` — the same iterator as a **UDTF**
     (lateral-join-able), mirroring the reference's
     generator-as-table-function.
 
 No network in this environment, so the transport is pluggable: pages
 come from a directory of XML files (the landing-zone pattern — in
-production a fetcher daemon writes the same files and Spark
-Auto-Loader-style streams them).  The XML parse + flatten + cursor
-semantics are the real thing.
+production a fetcher daemon writes the same files).  The XML parse +
+flatten + cursor semantics are the real thing.
 
-This is the streaming source and the source of the registered
-`source_xml_feed_*` queries.  The batch ETL (`etl_job.run_etl`) reads
-the same pages with Spark's built-in XML reader instead
-(`pipelines/ingest.py::read_feed`), so it starts no Python worker;
-this module is the reference that reader's flattened rows are tested
-against, field by field.
+Both are batch readers: this module backs the registered
+`source_xml_feed_roundtrip` query and is the reference that Spark's
+built-in XML reader is tested against, field by field.  The engine
+itself reads the feed with that built-in reader
+(`pipelines/ingest.py::feed_reader`): the batch ETL
+(`etl_job.run_etl`) through `read_feed`, starting no Python worker,
+and the stream (`source_xml_feed_stream`) through Spark's file
+source, whose log of files already seen is the stream offset.
 """
 
 from __future__ import annotations
@@ -38,14 +39,12 @@ from collections.abc import Iterator
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceStreamReader,
     EqualTo,
     GreaterThan,
     GreaterThanOrEqual,
     InputPartition,
     LessThan,
     LessThanOrEqual,
-    SimpleDataSourceStreamReader,
 )
 from pyspark.sql.types import StructType
 
@@ -134,8 +133,7 @@ def _split_spans(kept: list[tuple[int, str]], feed_dir: str, pages_per_split) ->
 def _read_page_span(partition: _PageSpan) -> Iterator:
     """Executor-side page read: one Arrow RecordBatch per page —
     Spark 4's Python Data Source Arrow path; ~5× cheaper than per-row
-    tuple pickling for wide string rows. Shared by the batch and
-    streaming readers (identical bytes either way)."""
+    tuple pickling for wide string rows."""
     import pyarrow as pa
 
     names = [f.split(" ")[0] for f in FEED_SCHEMA_DDL.split(", ")]
@@ -207,111 +205,6 @@ class XmlFeedReader(DataSourceReader):
         return _read_page_span(partition)
 
 
-class XmlFeedStreamReader(DataSourceStreamReader):
-    """S4 at scale: the reference's pagination cursor as REAL stream
-    offsets (SURVEY.md §2.9 "cursor == stream offset",
-    /root/reference/src/trv/endpoints.py:161-207).
-
-    The offset is ``{"page": n}`` — pages consumed so far. Each
-    micro-batch covers [start.page, end.page): ``latestOffset`` lists
-    the landing zone (the cheap driver-side op), ``partitions`` splits
-    the new page span across executors, and executors parse/flatten in
-    parallel via the same Arrow path as the batch reader. Spark
-    checkpoints the committed offset, so a restarted query resumes at
-    the exact page it left off — the exactly-once incremental ingest
-    the reference approximates with `(ModifiedTime, PublicationTime)`
-    cursors plus a keyed upsert.
-
-    ``maxPages`` bounds the whole scan for parity with the batch
-    reader's default. Per-trigger rate limiting lives in
-    :class:`XmlFeedSimpleStreamReader` instead — this API's batch end
-    comes from ``latestOffset()``, which is not told the committed
-    start, so capping inside ``partitions()`` would silently skip the
-    uncapped remainder (offsets would advance past unread pages).
-    """
-
-    def __init__(self, options: dict):
-        self.dir = options["path"]
-        self.pages_per_split = options.get("pagesPerSplit", "auto")
-        self.max_pages = int(options.get("maxPages", "1000000"))
-
-    def _n_pages(self) -> int:
-        n = len([f for f in os.listdir(self.dir) if f.endswith(".xml")])
-        return min(n, self.max_pages)
-
-    def initialOffset(self) -> dict:
-        return {"page": 0}
-
-    def latestOffset(self) -> dict:
-        return {"page": self._n_pages()}
-
-    def partitions(self, start: dict, end: dict):
-        lo, hi = start["page"], end["page"]
-        files = sorted(
-            f for f in os.listdir(self.dir) if f.endswith(".xml")
-        )[: self.max_pages]
-        kept = [(i, f) for i, f in enumerate(files) if lo <= i < hi]
-        return _split_spans(kept, self.dir, self.pages_per_split)
-
-    def read(self, partition: _PageSpan) -> Iterator:
-        return _read_page_span(partition)
-
-    def commit(self, end: dict) -> None:
-        # Offsets live in the query checkpoint; the landing zone is
-        # append-only, so there is nothing source-side to clean up.
-        pass
-
-
-class XmlFeedSimpleStreamReader(SimpleDataSourceStreamReader):
-    """Rate-limited variant: ``maxPagesPerTrigger`` pages per
-    micro-batch. The simple-reader API is the only Python surface
-    with admission control — ``read(start)`` chooses its OWN end
-    offset knowing the true committed start, so a capped batch can
-    never skip pages (restart-safe by construction). Reads happen on
-    the driver, which is the right trade for a throughput-bounded
-    backfill; the uncapped :class:`XmlFeedStreamReader` is the
-    distributed path."""
-
-    def __init__(self, options: dict):
-        self.dir = options["path"]
-        self.max_pages = int(options.get("maxPages", "1000000"))
-        self.max_per_trigger = int(options.get("maxPagesPerTrigger", "1000000"))
-
-    def _files(self) -> list[str]:
-        return sorted(
-            f for f in os.listdir(self.dir) if f.endswith(".xml")
-        )[: self.max_pages]
-
-    def initialOffset(self) -> dict:
-        return {"page": 0}
-
-    def _rows_between(self, lo: int, hi: int) -> Iterator[tuple]:
-        for page_no, fname in enumerate(self._files()):
-            if lo <= page_no < hi:
-                xml_text = fetch_with_retry(
-                    lambda p=os.path.join(self.dir, fname): open(p, encoding="utf-8").read()
-                )
-                yield from parse_situation_xml(xml_text, page_no)
-
-    def read(self, start: dict):
-        lo = start["page"]
-        hi = min(len(self._files()), lo + self.max_per_trigger)
-        if hi <= lo:
-            return iter([]), start
-        # Materialize: Spark's prefetch cache copy.copy()s this
-        # iterator (generators aren't copyable/picklable). A capped
-        # batch is small by definition, so driver memory is bounded
-        # by maxPagesPerTrigger × page size.
-        return iter(list(self._rows_between(lo, hi))), {"page": hi}
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        # Deterministic replay for recovery: same pages → same rows.
-        return self._rows_between(start["page"], end["page"])
-
-    def commit(self, end: dict) -> None:
-        pass
-
-
 class XmlFeedDataSource(DataSource):
     """spark.read.format("xml_feed").option("path", dir).load()"""
 
@@ -324,23 +217,6 @@ class XmlFeedDataSource(DataSource):
 
     def reader(self, schema: StructType) -> XmlFeedReader:
         return XmlFeedReader(self.options)
-
-    def streamReader(self, schema: StructType) -> XmlFeedStreamReader:
-        if "maxPagesPerTrigger" in self.options:
-            # Documented dispatch: Spark falls back to
-            # simpleStreamReader() only when streamReader() raises
-            # NOT_IMPLEMENTED — the simple reader is the one API with
-            # admission control (read(start) picks its own end).
-            from pyspark.errors import PySparkNotImplementedError
-
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "rate-limited distributed streamReader"},
-            )
-        return XmlFeedStreamReader(self.options)
-
-    def simpleStreamReader(self, schema: StructType) -> XmlFeedSimpleStreamReader:
-        return XmlFeedSimpleStreamReader(self.options)
 
 
 def register_xml_feed(spark) -> None:

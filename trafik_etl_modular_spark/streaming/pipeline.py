@@ -965,7 +965,6 @@ def watermark_lateness_run(
     row is dropped iff its event time < max_ts(seen so far) − delay.
     Stream ≡ batch, the family's standing verification shape."""
     import json
-    import tempfile
 
     _ensure_session_confs(spark)
     d = _late_replay_dir(sf_dir)
@@ -996,14 +995,7 @@ def watermark_lateness_run(
     prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        q = (
-            agg.writeStream.format("noop")
-            .option(
-                "checkpointLocation", tempfile.mkdtemp(prefix="late_audit_ckpt_")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
+        q = agg.writeStream.format("noop").trigger(availableNow=True).start()
         try:
             q.awaitTermination()
             progress = [json.loads(p.json) for p in q.recentProgress]
