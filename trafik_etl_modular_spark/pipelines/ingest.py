@@ -70,7 +70,9 @@ SITUATION_SCHEMA = _SITUATION.format(county="int")
 FEED_SCHEMA = _SITUATION.format(county="string") + ", _corrupt_record string"
 
 
-def feed_reader(reader: DataFrameReader | DataStreamReader):
+def feed_reader(
+    reader: DataFrameReader | DataStreamReader,
+) -> DataFrameReader | DataStreamReader:
     """The feed's one format decision, for a batch or a stream read:
     Spark's built-in XML reader, one row per Situation, over the
     ``*.xml`` pages only."""
@@ -119,8 +121,9 @@ def feed_to_flat(raw: DataFrame) -> DataFrame:
 def explode_situations(raw: DataFrame) -> DataFrame:
     """S3 — one row per Deviation, parent fields repeated, as the feed
     source's raw-string columns.  Plain (inner) explode:
-    deviation-less Situations, and the all-NULL row of a page that
-    does not parse, vanish, matching both reference implementations."""
+    deviation-less Situations vanish, matching both reference
+    implementations, and so does the all-NULL row of a page that does
+    not parse."""
     return raw.select("*", F.explode("Deviation").alias("d")).selectExpr(
         "Id AS situation_id",
         "ModifiedTime AS modified_time",
