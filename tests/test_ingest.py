@@ -192,6 +192,25 @@ def test_county_dim_is_a_local_relation(spark):
     assert dim.count() == 21
 
 
+def test_connected_components_driver_path_is_a_local_relation(spark):
+    """The driver-side union-find returns its labels as a JVM literal:
+    no Python RDD behind it, so reading it starts no Python worker.
+    Its schema is the distributed path's for long, string and empty
+    edge sets."""
+    from trafik_etl_modular_spark.llmdata.dedup import connected_components
+
+    for ddl, rows in (
+        ("id_a long, id_b long", [(1, 2), (2, 3), (7, 5)]),
+        ("id_a string, id_b string", [("b", "a"), ("c", "b")]),
+        ("id_a long, id_b long", []),
+    ):
+        edges = spark.createDataFrame(rows, ddl)
+        labels = connected_components(edges)
+        analyzed = labels._jdf.queryExecution().analyzed().toString()
+        assert "LocalRelation" in analyzed and "LogicalRDD" not in analyzed
+        assert labels.schema == connected_components(edges, driver_threshold=0).schema
+
+
 def test_feed_to_normalize_plan_has_no_python_node(spark, feed_dir):
     """read_feed → flatten → normalize (with the dimension join) plans
     no Python scan or Python UDF evaluation."""

@@ -488,6 +488,37 @@ def test_stream_reader_rate_limit_bounds_batches(spark, tmp_path):
     assert n_batches >= 3
 
 
+def test_run_stream_restores_confs_and_listener_on_failure(spark, tmp_path):
+    """A foreachBatch that raises fails run_stream with its error, and
+    the run still restores both pinned confs and removes its listener."""
+    from trafik_etl_modular_spark.streaming.observability import MetricsListener
+    from trafik_etl_modular_spark.streaming.pipeline import run_stream
+
+    src = str(tmp_path / "in")
+    spark.range(3).write.parquet(src)
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+    )
+    before = {k: spark.conf.get(k) for k in keys}
+    listeners = spark._jsparkSession.streams().listListeners
+    n_listeners = len(listeners())
+
+    def fail(batch_df, epoch_id):
+        raise RuntimeError("batch sink down")
+
+    writer = spark.readStream.schema("id long").parquet(src).writeStream
+    with pytest.raises(Exception, match="batch sink down"):
+        run_stream(
+            writer.foreachBatch(fail),
+            state_partitions=3,
+            no_data_flush=False,
+            listener=MetricsListener(),
+        )
+    assert {k: spark.conf.get(k) for k in keys} == before
+    assert len(listeners()) == n_listeners
+
+
 def test_landing_sink_two_phase_commit(spark, tmp_path):
     """Streaming sink with manifest-based commit: readers see exactly
     the committed micro-batches; stray task files without a manifest
@@ -672,56 +703,82 @@ def test_landing_zone_vacuum_retention(spark, tmp_path):
     assert len(got) == 10 and got == list(range(got[0], got[0] + 10))
 
 
+def _staged_rows(d: str) -> int:
+    """Rows across a staged dir's own parquet parts (not the symlink
+    to the live fixture)."""
+    import pyarrow.parquet as pq
+
+    paths = glob.glob(os.path.join(d, "*.parquet"))
+    return sum(pq.read_metadata(p).num_rows for p in paths if not os.path.islink(p))
+
+
+def _sentinel_year(d: str) -> int:
+    import pyarrow.parquet as pq
+
+    sentinel = pq.read_table(os.path.join(d, "zz_sentinel.parquet"))
+    return max(sentinel["ts"].to_pylist()).year
+
+
+def _feed_rows(d: str) -> int:
+    return sum(open(p).read().count("<Situation>") for p in glob.glob(f"{d}/*.xml"))
+
+
 def test_sentinel_stream_dir_invalidates_on_fixture_change(tmp_path):
-    """The sentinel stream dir is cached on disk; its key must
-    identify the fixture CONTENT, not just the path (advisor r3: a
-    regenerated fixture at the same path with later timestamps reused
-    a stale sentinel whose ts no longer advanced the watermark past
-    the new data)."""
-    import os
+    """Every staged dir is cached on disk; its key must identify the
+    fixture CONTENT, not just the path (advisor r3: a regenerated
+    fixture at the same path with later timestamps reused a stale
+    sentinel whose ts no longer advanced the watermark past the new
+    data).  Each stager stages a 4-row fixture, then the same path
+    regrown to 10 later rows, and must serve the new rows."""
     import time
     from datetime import datetime, timedelta
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from trafik_etl_modular_spark.streaming.pipeline import _sentinel_stream_dir
+    from trafik_etl_modular_spark.queries.source_feed import ensure_feed_dir
+    from trafik_etl_modular_spark.streaming import incremental_dedup, pipeline
+    from trafik_etl_modular_spark.streaming.sessionize import stage_time_ordered_chunks
 
     sf_dir = str(tmp_path)
-    src = os.path.join(sf_dir, "events.parquet")
 
-    def write_fixture(base_ts):
-        tbl = pa.table(
-            {
-                "event_id": pa.array([1, 2], type=pa.int64()),
-                "ts": pa.array(
-                    [base_ts, base_ts + timedelta(minutes=5)],
-                    type=pa.timestamp("us"),
-                ),
-                "user_id": pa.array([10, 20], type=pa.int64()),
-                "event_type": pa.array(["click", "purchase"]),
-                "value": pa.array([1.0, 2.0]),
-                "props": pa.array(["", ""]),
-            }
-        )
-        pq.write_table(tbl, src)
+    def write_fixture(base_ts, n):
+        ids = pa.array(range(1, n + 1), type=pa.int64())
+        events = {
+            "event_id": ids,
+            "ts": pa.array(
+                [base_ts + timedelta(minutes=5 * i) for i in range(n)],
+                type=pa.timestamp("us"),
+            ),
+            "user_id": pa.array([10 * i for i in range(n)], type=pa.int64()),
+            "event_type": pa.array(["click", "purchase"] * (n // 2)),
+            "value": pa.array([1.0] * n),
+            "props": pa.array([""] * n),
+        }
+        docs = {"doc_id": ids, "text": pa.array(["a b c d"] * n)}
+        for name, cols in (("events", events), ("documents", docs)):
+            path = os.path.join(sf_dir, f"{name}.parquet")
+            pq.write_table(pa.table(cols), path)
+            # a different mtime even on coarse-granularity filesystems
+            os.utime(path, (time.time() + n, time.time() + n))
 
-    write_fixture(datetime(2024, 1, 1))
-    d1 = _sentinel_stream_dir(sf_dir)
-    sent1 = pq.read_table(os.path.join(d1, "zz_sentinel.parquet"))
-    ts1 = max(sent1["ts"].to_pylist())
-
-    # regenerate the fixture at the SAME path with LATER timestamps
-    # (force a different mtime even on coarse-granularity filesystems)
-    write_fixture(datetime(2030, 6, 1))
-    os.utime(src, (time.time() + 5, time.time() + 5))
-    d2 = _sentinel_stream_dir(sf_dir)
-    sent2 = pq.read_table(os.path.join(d2, "zz_sentinel.parquet"))
-    ts2 = max(sent2["ts"].to_pylist())
-
-    assert d2 != d1, "regenerated fixture must get a fresh sentinel dir"
-    assert ts2 > datetime(2030, 6, 1), "sentinel must advance past the NEW max ts"
-    assert ts1 < datetime(2025, 1, 1)
+    # (stager, what it serves, for the 4-row fixture, for the 10-row one);
+    # the late replay re-delivers its one day twice (3 rows per row)
+    stagers = [
+        (pipeline._sentinel_stream_dir, _sentinel_year, 2024, 2030),
+        (pipeline._events_bucket_dir, _staged_rows, 4, 10),
+        (pipeline._late_replay_dir, _staged_rows, 12, 30),
+        (stage_time_ordered_chunks, _staged_rows, 4, 10),
+        (lambda sf: incremental_dedup._documents_batch_dir(sf, 4), _staged_rows, 4, 10),
+        (ensure_feed_dir, _feed_rows, 4, 10),
+    ]
+    write_fixture(datetime(2024, 1, 1), 4)
+    first = [stage(sf_dir) for stage, *_ in stagers]
+    write_fixture(datetime(2030, 6, 1), 10)
+    for d1, (stage, serves, old, new) in zip(first, stagers):
+        d2 = stage(sf_dir)
+        assert serves(d1) == old, d1
+        assert d2 != d1 and serves(d2) == new, f"{d2} serves the old fixture"
 
 
 def test_iter_listing_bounded_pages(tmp_path):

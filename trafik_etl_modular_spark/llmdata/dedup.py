@@ -21,9 +21,11 @@ driver and cross-validated against exact Jaccard in tests/.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 
 def shingles(text: Column | str, k: int = 3) -> Column:
@@ -967,11 +969,14 @@ def connected_components(
             for row in head:
                 nodes.add(row["u"])
                 nodes.add(row["v"])
-            rows = [(n, find(n)) for n in sorted(nodes)]
+            ids = sorted(nodes)
             # Schema must be IDENTICAL to the distributed path's for
             # any id type (string doc ids, ints, ...): both columns
             # carry the src column's type, so callers can't tell
-            # which strategy ran.
+            # which strategy ran.  An Arrow table, not a list: under
+            # the Arrow local-relation threshold it plans as a
+            # LocalRelation, with no pickled Python RDD (and so no
+            # Python worker) behind it.
             id_type = e.schema["u"].dataType
             out_schema = T.StructType(
                 [
@@ -979,7 +984,14 @@ def connected_components(
                     T.StructField("label", id_type, True),
                 ]
             )
-            return edges.sparkSession.createDataFrame(rows, out_schema)
+            at = to_arrow_type(id_type)
+            tbl = pa.table(
+                {
+                    "id": pa.array(ids, at),
+                    "label": pa.array([find(n) for n in ids], at),
+                }
+            )
+            return edges.sparkSession.createDataFrame(tbl, out_schema)
     sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     if n_partitions:
         sym = sym.repartition(n_partitions, "v")

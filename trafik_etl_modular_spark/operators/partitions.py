@@ -12,13 +12,16 @@ nothing.
 partitions of a partitioned parquet table" (the pure-parquet MERGE of
 SURVEY §7.1/§7.4): the sink's MERGE and the IVF index's compaction and
 purge all call it.  :func:`publish_dir` is the one publish step of a
-build-once warehouse artifact.
+build-once warehouse artifact, and :func:`staged_dir` the one build of
+a directory derived from a fixture file.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -82,3 +85,22 @@ def publish_dir(tmp: str, path: str) -> None:
         os.rename(tmp, path)
     except OSError:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def staged_dir(src: str, tag: str, write: Callable[[str], None]) -> str:
+    """Return ``/tmp/trafik_<tag>_<hash>``, a directory derived from the
+    file ``src`` and built once: ``write(tmp)`` fills a fresh temp dir
+    and :func:`publish_dir` renames it into place, so a reader sees all
+    of it or none of it.  The key is ``src``'s path, mtime and size plus
+    ``tag``: a fixture regenerated at the same path gets a new
+    directory, never a stale one."""
+    st = os.stat(src)
+    key = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|{tag}"
+    path = f"/tmp/trafik_{tag}_{hashlib.md5(key.encode()).hexdigest()[:10]}"
+    if not os.path.isdir(path):
+        tmp = f"{path}.tmp.{os.getpid()}"
+        shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(tmp)
+        write(tmp)
+        publish_dir(tmp, path)
+    return path

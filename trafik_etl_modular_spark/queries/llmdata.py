@@ -64,7 +64,7 @@ from trafik_etl_modular_spark.llmdata.text import (
 )
 from trafik_etl_modular_spark.functions.scalars import fquant, oracle_fquant
 from trafik_etl_modular_spark.operators.grouped import percent_rank_by_group
-from trafik_etl_modular_spark.operators.partitions import publish_dir
+from trafik_etl_modular_spark.operators.partitions import publish_dir, staged_dir
 from trafik_etl_modular_spark.queries.common import t
 from trafik_etl_modular_spark.registry import query
 
@@ -1913,33 +1913,18 @@ def _stage_derived_parquet(sf_dir: str, tag: str, columns: dict) -> str:
     oracle reads via ``read_parquet`` (ADVICE r11: corpus-sized inline
     VALUES tuples bloat the oracle's parse/plan time and memory
     linearly with the fixture; only bounded panels stay inline).
-    Content-keyed on the embeddings fixture + tag, `_DONE`-marked —
-    the ``ensure_evolved_dir`` pattern."""
-    import hashlib
-    import os
-
+    Content-keyed on the embeddings fixture + tag (:func:`staged_dir`)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    key = f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}|{tag}"
-    d = f"/tmp/trafik_derived_{hashlib.md5(key.encode()).hexdigest()[:10]}"
-    path = os.path.join(d, "staged.parquet")
-    done = os.path.join(d, "_DONE")
-    if not os.path.exists(done):
-        os.makedirs(d, exist_ok=True)
-        pq.write_table(
-            pa.table(
-                {
-                    name: pa.array([int(v) for v in vals], pa.int64())
-                    for name, vals in columns.items()
-                }
-            ),
-            path,
-        )
-        open(done, "w").close()
-    return path
+    def write(d: str) -> None:
+        cols = {
+            k: pa.array([int(v) for v in vs], pa.int64()) for k, vs in columns.items()
+        }
+        pq.write_table(pa.table(cols), f"{d}/staged.parquet")
+
+    src = f"{sf_dir}/embeddings.parquet"
+    return f"{staged_dir(src, f'derived_{tag}', write)}/staged.parquet"
 
 
 def _ivf_probe_oracle_sql(sf_dir: str) -> str:
@@ -6828,41 +6813,6 @@ def _probe_panel_vectors(sf_dir: str) -> list[tuple[int, list[float]]]:
     ]
 
 
-def _stage_ivf_assignment(sf_dir: str, ids, assign) -> str:
-    """Stage the derived corpus→bucket assignment as a parquet file
-    the oracle reads (ADVICE r11: the inline VALUES tuple grew one
-    row per EMBEDDING ROW, bloating the oracle's parse/plan time and
-    memory linearly with the corpus; only the ≤|centroids|-rows-per-
-    probe bucket ranking stays inline).  Content-keyed on the fixture
-    like ``source_feed.ensure_evolved_dir`` so every render at the
-    same fixture reuses the staged file."""
-    import hashlib
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    key = f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}|ivf-assign-v1"
-    d = f"/tmp/trafik_ivf_assign_{hashlib.md5(key.encode()).hexdigest()[:10]}"
-    path = os.path.join(d, "assign.parquet")
-    done = os.path.join(d, "_DONE")
-    if not os.path.exists(done):
-        os.makedirs(d, exist_ok=True)
-        pq.write_table(
-            pa.table(
-                {
-                    "vec_id": pa.array([int(i) for i in ids], pa.int64()),
-                    "bucket": pa.array([int(b) for b in assign], pa.int64()),
-                }
-            ),
-            path,
-        )
-        open(done, "w").close()
-    return path
-
-
 def _ivf_nprobe_sweep_oracle_sql(sf_dir: str) -> str:
     """DERIVED oracle for the nprobe sweep: bucket ASSIGNMENT and the
     per-probe bucket RANKING are re-derived outside the engine (the
@@ -6875,7 +6825,9 @@ def _ivf_nprobe_sweep_oracle_sql(sf_dir: str) -> str:
     from trafik_etl_modular_spark.llmdata.similarity import rank_probe_buckets
 
     ids, vecs, assign, centers = _derive_ivf_assignment(sf_dir)
-    a_path = _stage_ivf_assignment(sf_dir, ids, assign)
+    a_path = _stage_derived_parquet(
+        sf_dir, "ivf-assign-v1", {"vec_id": ids, "bucket": assign}
+    )
     centroid_rows = [(j, [float(v) for v in centers[j]]) for j in range(len(centers))]
     id_to_idx = {int(i): j for j, i in enumerate(ids)}
     br_vals = []

@@ -8,12 +8,12 @@ parity).
 
 from __future__ import annotations
 
-import hashlib
 import os
 from xml.sax.saxutils import escape
 
 from pyspark.sql import functions as F
 
+from trafik_etl_modular_spark.operators.partitions import staged_dir
 from trafik_etl_modular_spark.pipelines.ingest import explode_situations, feed_reader
 from trafik_etl_modular_spark.registry import query
 from trafik_etl_modular_spark.sources.xml_feed import register_xml_feed
@@ -23,43 +23,41 @@ _PAGE_SIZE = 500  # reference page size (config.py:24)
 
 
 def ensure_feed_dir(sf_dir: str) -> str:
-    """Generate the XML page files once per sf_dir (deterministic:
-    events ordered by event_id, 500/page — the reference's page
-    size). pyarrow read keeps this Spark-free and cheap."""
+    """Stage the events fixture as XML page files
+    (:func:`~trafik_etl_modular_spark.operators.partitions.staged_dir`;
+    deterministic: events ordered by event_id, 500/page — the
+    reference's page size). pyarrow read keeps this Spark-free and
+    cheap."""
     import pyarrow.parquet as pq
 
-    d = f"/tmp/trafik_xml_feed_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
-    done = os.path.join(d, "_DONE")
-    if os.path.exists(done):
-        return d
-    os.makedirs(d, exist_ok=True)
+    src = os.path.join(sf_dir, "events.parquet")
 
-    tbl = pq.read_table(
-        os.path.join(sf_dir, "events.parquet"),
-        columns=["event_id", "ts", "user_id", "event_type", "props"],
-    )
-    rows = sorted(tbl.to_pylist(), key=lambda r: r["event_id"])
-    for page_no in range(0, len(rows), _PAGE_SIZE):
-        chunk = rows[page_no : page_no + _PAGE_SIZE]
-        parts = ["<Response>"]
-        for r in chunk:
-            iso = r["ts"].strftime("%Y-%m-%dT%H:%M:%SZ")
-            parts.append(
-                f"<Situation><Id>S{r['event_id']}</Id>"
-                f"<ModifiedTime>{iso}</ModifiedTime>"
-                f"<PublicationTime>{iso}</PublicationTime>"
-                f"<Deviation><Id>D{r['event_id']}</Id>"
-                f"<Message>{escape(r['props'])}</Message>"
-                f"<MessageType>{escape(r['event_type'])}</MessageType>"
-                f"<CountyNo>{r['user_id'] % 25}</CountyNo>"
-                f"<StartTime>{iso}</StartTime>"
-                f"</Deviation></Situation>"
-            )
-        parts.append("</Response>")
-        with open(os.path.join(d, f"page_{page_no // _PAGE_SIZE:05d}.xml"), "w") as f:
-            f.write("".join(parts))
-    open(done, "w").close()
-    return d
+    def write(d: str) -> None:
+        tbl = pq.read_table(
+            src, columns=["event_id", "ts", "user_id", "event_type", "props"]
+        )
+        rows = sorted(tbl.to_pylist(), key=lambda r: r["event_id"])
+        for page_no in range(0, len(rows), _PAGE_SIZE):
+            parts = ["<Response>"]
+            for r in rows[page_no : page_no + _PAGE_SIZE]:
+                iso = r["ts"].strftime("%Y-%m-%dT%H:%M:%SZ")
+                parts.append(
+                    f"<Situation><Id>S{r['event_id']}</Id>"
+                    f"<ModifiedTime>{iso}</ModifiedTime>"
+                    f"<PublicationTime>{iso}</PublicationTime>"
+                    f"<Deviation><Id>D{r['event_id']}</Id>"
+                    f"<Message>{escape(r['props'])}</Message>"
+                    f"<MessageType>{escape(r['event_type'])}</MessageType>"
+                    f"<CountyNo>{r['user_id'] % 25}</CountyNo>"
+                    f"<StartTime>{iso}</StartTime>"
+                    f"</Deviation></Situation>"
+                )
+            parts.append("</Response>")
+            name = f"page_{page_no // _PAGE_SIZE:05d}.xml"
+            with open(os.path.join(d, name), "w") as f:
+                f.write("".join(parts))
+
+    return staged_dir(src, "xml_feed", write)
 
 
 _ROUNDTRIP_SQL = """
@@ -113,34 +111,31 @@ def source_xml_feed_stream(spark, sf_dir):
 
 
 def ensure_evolved_dir(sf_dir: str) -> str:
-    """Stage a SCHEMA-EVOLVED parquet directory once per fixture: an
-    old-generation file (o_orderkey, o_totalprice) for even keys and
+    """Stage a SCHEMA-EVOLVED parquet directory once per fixture
+    (:func:`~trafik_etl_modular_spark.operators.partitions.staged_dir`):
+    an old-generation file (o_orderkey, o_totalprice) for even keys and
     a new-generation file that ADDED a column (…, o_year) for odd
     keys — the additive-column evolution every long-lived lake table
-    goes through.  Content-keyed like the stream staging dirs."""
+    goes through."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    key = f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}"
-    d = f"/tmp/trafik_evolved_{hashlib.md5(key.encode()).hexdigest()[:10]}"
-    done = os.path.join(d, "_DONE")
-    if os.path.exists(done):
-        return d
-    os.makedirs(d, exist_ok=True)
-    tbl = pq.read_table(src, columns=["o_orderkey", "o_totalprice", "o_orderdate"])
-    keys = tbl["o_orderkey"].to_numpy()
-    even = tbl.filter(pa.array(keys % 2 == 0)).select(["o_orderkey", "o_totalprice"])
-    odd = tbl.filter(pa.array(keys % 2 == 1))
-    odd = odd.select(["o_orderkey", "o_totalprice"]).append_column(
-        "o_year", pc.cast(pc.year(odd["o_orderdate"]), pa.int32())
-    )
-    pq.write_table(even, os.path.join(d, "gen1.parquet"))
-    pq.write_table(odd, os.path.join(d, "gen2.parquet"))
-    open(done, "w").close()
-    return d
+
+    def write(d: str) -> None:
+        tbl = pq.read_table(src, columns=["o_orderkey", "o_totalprice", "o_orderdate"])
+        keys = tbl["o_orderkey"].to_numpy()
+        cols = ["o_orderkey", "o_totalprice"]
+        even = tbl.filter(pa.array(keys % 2 == 0)).select(cols)
+        odd = tbl.filter(pa.array(keys % 2 == 1))
+        odd = odd.select(cols).append_column(
+            "o_year", pc.cast(pc.year(odd["o_orderdate"]), pa.int32())
+        )
+        pq.write_table(even, os.path.join(d, "gen1.parquet"))
+        pq.write_table(odd, os.path.join(d, "gen2.parquet"))
+
+    return staged_dir(src, "evolved", write)
 
 
 def _evolution_sql(sf_dir: str) -> str:

@@ -21,46 +21,33 @@ delivered oldest-mtime-first by the file source.
 
 from __future__ import annotations
 
-import hashlib
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from trafik_etl_modular_spark.catalog import _ensure_session_confs, table_path
+from trafik_etl_modular_spark.streaming.pipeline import (
+    read_events_stream,
+    run_stream,
+    stage_batches,
+)
 
 
 def _documents_batch_dir(sf_dir: str, n_batches: int) -> str:
     """Stage the documents fixture as ``n_batches`` parquet files
-    (batch_id = doc_id % n, ascending mtimes 1 s apart) under /tmp —
-    content-keyed like the sentinel stream dir so a regenerated
-    fixture can never reuse a stale split."""
+    (batch_id = doc_id % n, ascending mtimes — :func:`stage_batches`)."""
     import pyarrow as pa
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    src = table_path(sf_dir, "documents")
-    st = os.stat(src)
-    key = f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}|{n_batches}"
-    d = f"/tmp/trafik_docstream_{hashlib.md5(key.encode()).hexdigest()[:10]}"
-    done = os.path.join(d, "_DONE")
-    if os.path.exists(done):
-        return d
-    os.makedirs(d, exist_ok=True)
-    tbl = pq.read_table(src)
-    ids = tbl["doc_id"].to_numpy()
-    base = int(os.stat(src).st_mtime) - n_batches - 1
-    for i in range(n_batches):
-        mask = pa.array(ids % n_batches == i)
-        sub = tbl.filter(mask)
-        sub = sub.append_column(
-            "batch_id", pa.array([i] * sub.num_rows, type=pa.int64())
-        )
-        path = os.path.join(d, f"batch_{i}.parquet")
-        pq.write_table(sub, path)
-        os.utime(path, (base + i, base + i))
-    with open(done, "w") as f:
-        f.write("ok")
-    return d
+    def build(src: str) -> list:
+        tbl = pq.read_table(src)
+        batch = pa.array(tbl["doc_id"].to_numpy() % n_batches)
+        tbl = tbl.append_column("batch_id", batch)
+        return [
+            (f"batch_{i}.parquet", tbl.filter(pc.equal(batch, i)))
+            for i in range(n_batches)
+        ]
+
+    return stage_batches(sf_dir, "documents", f"docstream{n_batches}", build)
 
 
 def incremental_dedup_stream_run(
@@ -85,14 +72,8 @@ def incremental_dedup_stream_run(
         shingle_postings,
     )
 
-    _ensure_session_confs(spark)
     d = _documents_batch_dir(sf_dir, n_batches)
-    raw = (
-        spark.readStream.format("parquet")
-        .schema(spark.read.parquet(d).schema)
-        .option("maxFilesPerTrigger", "1")
-        .load(d)
-    )
+    raw = read_events_stream(spark, sf_dir, stream_dir=d)
 
     state: dict[str, DataFrame] = {}
 
@@ -149,20 +130,6 @@ def incremental_dedup_stream_run(
         state["result"] = verdicts if prev is None else prev.unionByName(verdicts)
 
     # per-micro-batch joins/aggs are batch-sized — 8 shuffle
-    # partitions, not the session's batch-scale default (same
-    # reasoning as pipeline._run_to_memory's state_partitions)
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            raw.writeStream.foreachBatch(apply_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+    # partitions, not the session's batch-scale default
+    run_stream(raw.writeStream.foreachBatch(apply_batch), state_partitions=8)
     return state["result"].orderBy("doc_id")

@@ -7,18 +7,25 @@ The reference encodes these as a daily cron + cursor pagination + PK
 upsert (/root/reference/src/trv/endpoints.py:166-207,
 load_sqlite.py:43-62); here they are actual streaming operators.  For
 tests and driver checks the parquet fixture drives the stream via the
-file source and `processAllAvailable()` — semantically the same
-micro-batch path a Kafka source would take.
+file source and an `availableNow` trigger — semantically the same
+micro-batch path a Kafka source would take.  The drivers share one
+stager (:func:`stage_batches`), one reader (:func:`read_events_stream`)
+and one runner (:func:`run_stream`).
 """
 
 from __future__ import annotations
 
 import itertools
+import os
+import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from trafik_etl_modular_spark.catalog import _ensure_session_confs, table_path
+from trafik_etl_modular_spark.operators.partitions import staged_dir
 from trafik_etl_modular_spark.queries.dedup import latest_wins
 
 _counter = itertools.count()
@@ -49,58 +56,60 @@ def _sentinel_stream_dir(sf_dir: str) -> str:
     withheld in state.  The sentinel is the standard flush marker a
     production feed emits at end-of-partition/close — here staged as
     the mtime-last file so `maxFilesPerTrigger=1` delivers it as its
-    own closing batch."""
-    import hashlib
-    import os
-    import time as _time
+    own closing batch.  Content-keyed (:func:`staged_dir`): a
+    regenerated fixture with later timestamps gets a new sentinel
+    that advances the watermark past ITS data."""
+    from datetime import timedelta
 
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     src = table_path(sf_dir, "events")
-    # The cache key must identify the fixture CONTENT, not just its
-    # path (advisor r3): a regenerated fixture at the same path with
-    # later timestamps would otherwise reuse a stale sentinel whose ts
-    # no longer advances the watermark past the new data — silently
-    # withholding the final outer-join/session rows.  mtime+size of
-    # the source file stand in for content identity.
-    st = os.stat(src)
-    key = f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}"
-    d = f"/tmp/trafik_stream_sent_{hashlib.md5(key.encode()).hexdigest()[:10]}"
-    done = os.path.join(d, "_DONE")
-    if os.path.exists(done):
-        return d
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(src, link)
-    tbl = pq.read_table(src, columns=["ts"])
-    max_ts = pc.max(tbl["ts"]).as_py()
-    from datetime import timedelta
 
-    sent_ts = max_ts + timedelta(hours=4)
-    schema = pq.read_schema(src)
-    rows = {
-        "event_id": [-1, -2],
-        "ts": [sent_ts, sent_ts],
-        "user_id": [-1, -2],
-        "event_type": ["click", "purchase"],
-        "value": [0.0, 0.0],
-        "props": ["", ""],
-    }
-    sent = pa.table(
-        {f.name: pa.array(rows[f.name], type=f.type) for f in schema},
-        schema=pa.schema([schema.field(i) for i in range(len(schema.names))]),
-    )
-    p = os.path.join(d, "zz_sentinel.parquet")
-    pq.write_table(sent, p)
-    # Strictly after the fixture file even under clock skew (a
-    # just-generated fixture can carry an mtime ahead of now).
-    after = max(_time.time(), os.path.getmtime(src) + 1) + 10
-    os.utime(p, (after, after))
-    open(done, "w").close()
-    return d
+    def write(d: str) -> None:
+        os.symlink(src, os.path.join(d, "events.parquet"))
+        sent_ts = pc.max(pq.read_table(src, columns=["ts"])["ts"]).as_py()
+        sent_ts += timedelta(hours=4)
+        rows = {
+            "event_id": [-1, -2],
+            "ts": [sent_ts, sent_ts],
+            "user_id": [-1, -2],
+            "event_type": ["click", "purchase"],
+            "value": [0.0, 0.0],
+            "props": ["", ""],
+        }
+        schema = pq.read_schema(src)
+        p = os.path.join(d, "zz_sentinel.parquet")
+        pq.write_table(
+            pa.table({f.name: pa.array(rows[f.name], f.type) for f in schema}), p
+        )
+        # Strictly after the fixture file even under clock skew (a
+        # just-generated fixture can carry an mtime ahead of now).
+        after = max(time.time(), os.path.getmtime(src) + 1) + 10
+        os.utime(p, (after, after))
+
+    return staged_dir(src, "stream_sent", write)
+
+
+def stage_batches(sf_dir: str, table: str, tag: str, build: Callable[[str], list]) -> str:
+    """Stage fixture ``table`` as a file-source landing zone
+    (:func:`staged_dir`): ``build(src)`` returns the ``(name, table)``
+    parts, and each part is written with an mtime one second after the
+    last, so `maxFilesPerTrigger=1` delivers the parts in order, one
+    micro-batch each."""
+    import pyarrow.parquet as pq
+
+    src = table_path(sf_dir, table)
+
+    def write(d: str) -> None:
+        base = int(os.stat(src).st_mtime) - 100
+        for i, (name, part) in enumerate(build(src)):
+            path = os.path.join(d, name)
+            pq.write_table(part, path)
+            os.utime(path, (base + i, base + i))
+
+    return staged_dir(src, tag, write)
 
 
 def read_events_stream(
@@ -109,21 +118,23 @@ def read_events_stream(
     stream_dir: str | None = None,
     files_per_trigger: int = 1,
 ) -> DataFrame:
-    """File-source stream over the events fixture. maxFilesPerTrigger
-    keeps micro-batches bounded; in production this is the Kafka /
-    cloud-files source with the same downstream plan."""
+    """File-source stream over the events fixture, or over a staged
+    landing zone ``stream_dir``. maxFilesPerTrigger keeps micro-batches
+    bounded; in production this is the Kafka / cloud-files source with
+    the same downstream plan."""
     _ensure_session_confs(spark)
+    d = stream_dir or _stream_dir(sf_dir)
     # The file source needs an explicit schema; take it from the batch
-    # reader's interpretation of the SAME file (driver-side footer read
-    # only) so stream and batch can never disagree about the physical
-    # type of `ts` — declaring it by hand is how a unit bug creeps in
-    # (a bigint DDL over a timestamp[us] file silently yields raw
-    # micros where the nanos-era fixture yielded raw nanos).
+    # reader's interpretation of the SAME directory (driver-side footer
+    # read only) so stream and batch can never disagree about the
+    # physical type of `ts` — declaring it by hand is how a unit bug
+    # creeps in (a bigint DDL over a timestamp[us] file silently yields
+    # raw micros where the nanos-era fixture yielded raw nanos).
     raw = (
         spark.readStream.format("parquet")
-        .schema(spark.read.parquet(table_path(sf_dir, "events")).schema)
+        .schema(spark.read.parquet(d).schema)
         .option("maxFilesPerTrigger", str(files_per_trigger))
-        .load(stream_dir or _stream_dir(sf_dir))
+        .load(d)
     )
     if dict(raw.dtypes).get("ts") == "bigint":
         # Legacy nanos-as-long fixture: same conversion as
@@ -132,14 +143,15 @@ def read_events_stream(
     return raw
 
 
-def _run_to_memory(
-    stream_df: DataFrame,
-    mode: str,
+def run_stream(
+    writer: DataStreamWriter,
     state_partitions: int | None = 4,
     no_data_flush: bool = True,
-) -> DataFrame:
-    """Drive a streaming frame to completion synchronously into a
-    memory sink; return the sink contents as a batch frame.
+    listener=None,
+) -> StreamingQuery:
+    """Drive a streaming query to completion synchronously: start
+    ``writer`` with ``availableNow``, await it, stop it, and return the
+    stopped query (its ``recentProgress`` stays readable).
 
     ``state_partitions``: the state-store partition count is frozen
     from ``spark.sql.shuffle.partitions`` at stream start, and every
@@ -148,7 +160,7 @@ def _run_to_memory(
     dominates small local runs; measured at sf0.1 the stream-stream
     outer join runs ~3.5 s at 8 partitions vs ~2.8 s at 4 with
     identical results; at cluster scale the same override tracks
-    keys-per-executor).
+    keys-per-executor).  ``None`` keeps the session's value.
 
     ``no_data_flush``: whether to let the engine run its trailing
     NO-DATA micro-batch (profiled at a 0.6–0.9 s full state-store
@@ -160,31 +172,55 @@ def _run_to_memory(
     emission shapes where the flush batch can't change the sink:
     complete-mode aggregations (each batch rewrites the full table),
     inner interval joins and watermark dedup (rows emit in the batch
-    they arrive), and stateless stream-static joins."""
-    spark = stream_df.sparkSession
-    name = f"stream_sink_{next(_counter)}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_flush = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    if not no_data_flush:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    they arrive), and stateless stream-static joins.
+
+    Both confs are session confs read at query start; they are pinned
+    for this run and restored afterwards, also when the query fails.
+
+    ``listener``: a ``StreamingQueryListener`` attached for THIS run
+    only.  It is registered before the query starts and removed after
+    its terminated event is observed (listener delivery is async), so
+    callers can assert on ``listener.events`` deterministically."""
+    spark = writer._spark
+    flush = "spark.sql.streaming.noDataMicroBatches.enabled"
+    parts = "spark.sql.shuffle.partitions"
+    prev = {k: spark.conf.get(k) for k in (flush, parts)}
+    spark.conf.set(flush, str(no_data_flush).lower())
+    spark.conf.set(parts, str(state_partitions or prev[parts]))
+    if listener is not None:
+        spark.streams.addListener(listener)
     try:
-        q = (
-            stream_df.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
+        q = writer.trigger(availableNow=True).start()
         try:
             q.awaitTermination()
         finally:
             q.stop()
+        deadline = time.time() + 15
+        while listener is not None and time.time() < deadline and not any(
+            e.get("stage") == "terminated" and e.get("query_id") == str(q.id)
+            for e in getattr(listener, "events", [])
+        ):
+            time.sleep(0.2)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_flush)
-    return spark.sql(f"SELECT * FROM {name}")
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+        if listener is not None:
+            spark.streams.removeListener(listener)
+    return q
+
+
+def _run_to_memory(
+    stream_df: DataFrame,
+    mode: str,
+    state_partitions: int | None = 4,
+    no_data_flush: bool = True,
+) -> DataFrame:
+    """Run ``stream_df`` to completion into a memory sink
+    (:func:`run_stream`); return the sink contents as a batch frame."""
+    name = f"stream_sink_{next(_counter)}"
+    writer = stream_df.writeStream.outputMode(mode).format("memory").queryName(name)
+    run_stream(writer, state_partitions, no_data_flush)
+    return stream_df.sparkSession.sql(f"SELECT * FROM {name}")
 
 
 def hourly_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -580,13 +616,10 @@ def upsert_sink_run(
 
     ``listener`` (verdict r09 ask #6): an
     :class:`~trafik_etl_modular_spark.streaming.observability.MetricsListener`
-    to attach for THIS run — its ``check_row_volume`` band then fires
-    per MICRO-BATCH on the upsert, the streaming form of the
-    reference's per-run Slack volume guard (reference
-    src/cli.py:20-21,94-99).  The listener is registered before the
-    query starts and removed after its terminated event is observed
-    (listener delivery is async), so callers can assert on
-    ``listener.events`` deterministically.
+    to attach for THIS run (:func:`run_stream`) — its
+    ``check_row_volume`` band then fires per MICRO-BATCH on the upsert,
+    the streaming form of the reference's per-run Slack volume guard
+    (reference src/cli.py:20-21,94-99).
     """
     state: dict[str, DataFrame] = {}
 
@@ -604,37 +637,8 @@ def upsert_sink_run(
             merged, ["entity_id"], [F.desc("ts"), F.desc("event_id")]
         ).localCheckpoint(eager=True)
 
-    ev = read_events_stream(spark, sf_dir)
-    if listener is not None:
-        spark.streams.addListener(listener)
-    try:
-        q = (
-            ev.writeStream.foreachBatch(apply_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-        if listener is not None:
-            # listener events are delivered async on a separate bus
-            # thread — wait for this query's terminated event so the
-            # caller sees a complete, stable event log
-            import time as _time
-
-            deadline = _time.time() + 15
-            while _time.time() < deadline:
-                if any(
-                    e.get("stage") == "terminated"
-                    and e.get("query_id") == str(q.id)
-                    for e in getattr(listener, "events", [])
-                ):
-                    break
-                _time.sleep(0.2)
-    finally:
-        if listener is not None:
-            spark.streams.removeListener(listener)
+    writer = read_events_stream(spark, sf_dir).writeStream.foreachBatch(apply_batch)
+    run_stream(writer, state_partitions=None, listener=listener)
     return state["table"].orderBy("entity_id")
 
 
@@ -695,43 +699,29 @@ def _events_bucket_dir(
 ) -> str:
     """Stage the events fixture as one parquet file per BUCKET of
     ``bucket_days`` consecutive days (bucket = (day − min_day) //
-    bucket_days), ascending mtimes, so the file source delivers the
-    volume series as time-ordered micro-batches — the continuous-
-    monitoring feed shape.  Content-keyed like the other staged dirs
-    so a regenerated fixture can never reuse a stale split."""
-    import hashlib
-    import os
-
+    bucket_days), ascending mtimes (:func:`stage_batches`), so the
+    file source delivers the volume series as time-ordered micro-
+    batches — the continuous-monitoring feed shape."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    src = table_path(sf_dir, "events")
-    st = os.stat(src)
-    key = f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}|cusum|{bucket_days}|{columns}"
-    d = f"/tmp/trafik_cusum_{hashlib.md5(key.encode()).hexdigest()[:10]}"
-    done = os.path.join(d, "_DONE")
-    if os.path.exists(done):
-        return d
-    os.makedirs(d, exist_ok=True)
-    tbl = pq.read_table(src, columns=list(columns))
-    days = pc.cast(pc.cast(tbl["ts"], pa.timestamp("us")), pa.date32())
-    days_i = pc.cast(days, pa.int32())
-    d0 = pc.min(days_i).as_py()
-    bucket = pc.cast(
-        pc.floor(pc.divide(pc.subtract(days_i, d0), bucket_days)), pa.int64()
-    )
-    tbl = tbl.append_column("bucket", bucket)
-    base = int(st.st_mtime) - 100
-    buckets = sorted(set(bucket.to_pylist()))
-    for i, b in enumerate(buckets):
-        sub = tbl.filter(pc.equal(tbl["bucket"], b))
-        path = os.path.join(d, f"bucket_{b:03d}.parquet")
-        pq.write_table(sub, path)
-        os.utime(path, (base + i, base + i))
-    with open(done, "w") as f:
-        f.write("ok")
-    return d
+    def build(src: str) -> list:
+        tbl = pq.read_table(src, columns=list(columns))
+        days = pc.cast(pc.cast(tbl["ts"], pa.timestamp("us")), pa.date32())
+        days_i = pc.cast(days, pa.int32())
+        d0 = pc.min(days_i).as_py()
+        bucket = pc.cast(
+            pc.floor(pc.divide(pc.subtract(days_i, d0), bucket_days)), pa.int64()
+        )
+        tbl = tbl.append_column("bucket", bucket)
+        return [
+            (f"bucket_{b:03d}.parquet", tbl.filter(pc.equal(tbl["bucket"], b)))
+            for b in sorted(set(bucket.to_pylist()))
+        ]
+
+    tag = f"cusum{bucket_days}_{'_'.join(columns)}"
+    return stage_batches(sf_dir, "events", tag, build)
 
 
 def cusum_monitor_run(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -751,14 +741,7 @@ def cusum_monitor_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     one SQL pass via the prefix form (dq_cusum_changepoint's rewrite)
     over the same day-bucket definition — completed stream ≡ batch,
     the family's standing verification shape."""
-    _ensure_session_confs(spark)
-    d = _events_bucket_dir(sf_dir)
-    raw = (
-        spark.readStream.format("parquet")
-        .schema(spark.read.parquet(d).schema)
-        .option("maxFilesPerTrigger", "1")
-        .load(d)
-    )
+    raw = read_events_stream(spark, sf_dir, stream_dir=_events_bucket_dir(sf_dir))
     state: dict[str, object] = {"rows": [], "s": 0, "mu": None}
 
     def apply_batch(bdf: DataFrame, epoch_id: int) -> None:
@@ -773,17 +756,7 @@ def cusum_monitor_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             state["s"] = s
             state["rows"].append((r["bucket"], n, state["mu"], s))
 
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = raw.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-
+    run_stream(raw.writeStream.foreachBatch(apply_batch), state_partitions=8)
     out = spark.createDataFrame(
         state["rows"], "bucket bigint, n bigint, mu_e6 bigint, s_e6 bigint"
     )
@@ -814,13 +787,8 @@ def bitmap_distinct_monitor_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     Completed stream ≡ batch: the oracle recomputes per-day and
     global COUNT(DISTINCT) straight from raw events, plus the bucket
     count as the batch-cardinality certificate."""
-    _ensure_session_confs(spark)
-    d = _events_bucket_dir(sf_dir, columns=("user_id", "ts"))
-    raw = (
-        spark.readStream.format("parquet")
-        .schema(spark.read.parquet(d).schema)
-        .option("maxFilesPerTrigger", "1")
-        .load(d)
+    raw = read_events_stream(
+        spark, sf_dir, stream_dir=_events_bucket_dir(sf_dir, columns=("user_id", "ts"))
     )
     state: dict[str, object] = {"words": None, "n_batches": 0}
 
@@ -852,17 +820,7 @@ def bitmap_distinct_monitor_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         state["words"] = merged.coalesce(8).localCheckpoint(eager=True)
         state["n_batches"] += 1
 
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = raw.writeStream.foreachBatch(apply_batch).trigger(availableNow=True).start()
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-
+    run_stream(raw.writeStream.foreachBatch(apply_batch), state_partitions=8)
     words = state["words"]
     day_counts = words.groupBy("day").agg(
         F.sum(F.bit_count("w")).cast("bigint").alias("n_users")
@@ -886,8 +844,9 @@ def bitmap_distinct_monitor_run(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _late_replay_dir(sf_dir: str) -> str:
     """Stage an OUT-OF-ORDER event feed for the watermark-lateness
-    audit (verdict r11 ask #5): three files with ascending mtimes so
-    `maxFilesPerTrigger=1` delivers them as three micro-batches —
+    audit (verdict r11 ask #5): three files with ascending mtimes
+    (:func:`stage_batches`) so `maxFilesPerTrigger=1` delivers them as
+    three micro-batches —
 
       batch 0: the first half of the day span (on-time data);
       batch 1: the second half through the max day (advances the
@@ -899,47 +858,27 @@ def _late_replay_dir(sf_dir: str) -> str:
                BOTH verdicts.
 
     Margins are days wide on both sides of the watermark boundary, so
-    millisecond watermark truncation can never flip a row.  Content-
-    keyed like the other staged dirs."""
-    import hashlib
-    import os
-
+    millisecond watermark truncation can never flip a row."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    src = table_path(sf_dir, "events")
-    st = os.stat(src)
-    key = f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}|late-replay-v1"
-    d = f"/tmp/trafik_late_{hashlib.md5(key.encode()).hexdigest()[:10]}"
-    done = os.path.join(d, "_DONE")
-    if os.path.exists(done):
-        return d
-    os.makedirs(d, exist_ok=True)
-    tbl = pq.read_table(src)
-    days = pc.cast(pc.cast(tbl["ts"], pa.timestamp("us")), pa.date32())
-    days_i = pc.cast(days, pa.int32())
-    d0 = pc.min(days_i).as_py()
-    dmax = pc.max(days_i).as_py()
-    dmid = d0 + (dmax - d0 + 1) // 2
-    parts = [
-        tbl.filter(pc.less(days_i, dmid)),
-        tbl.filter(pc.greater_equal(days_i, dmid)),
-        pa.concat_tables(
-            [
-                tbl.filter(pc.less_equal(days_i, d0 + 1)),
-                tbl.filter(pc.equal(days_i, dmax)),
-            ]
-        ),
-    ]
-    base = int(st.st_mtime) - 100
-    for i, sub in enumerate(parts):
-        path = os.path.join(d, f"arrival_{i:03d}.parquet")
-        pq.write_table(sub, path)
-        os.utime(path, (base + i, base + i))
-    with open(done, "w") as f:
-        f.write("ok")
-    return d
+    def build(src: str) -> list:
+        tbl = pq.read_table(src)
+        days = pc.cast(pc.cast(tbl["ts"], pa.timestamp("us")), pa.date32())
+        days_i = pc.cast(days, pa.int32())
+        d0 = pc.min(days_i).as_py()
+        dmax = pc.max(days_i).as_py()
+        dmid = d0 + (dmax - d0 + 1) // 2
+        old, fresh = pc.less_equal(days_i, d0 + 1), pc.equal(days_i, dmax)
+        parts = [
+            tbl.filter(pc.less(days_i, dmid)),
+            tbl.filter(pc.greater_equal(days_i, dmid)),
+            pa.concat_tables([tbl.filter(old), tbl.filter(fresh)]),
+        ]
+        return [(f"arrival_{i:03d}.parquet", p) for i, p in enumerate(parts)]
+
+    return stage_batches(sf_dir, "events", "late_replay", build)
 
 
 WATERMARK_LATENESS_DELAY = "2 days"
@@ -966,19 +905,10 @@ def watermark_lateness_run(
     Stream ≡ batch, the family's standing verification shape."""
     import json
 
-    _ensure_session_confs(spark)
-    d = _late_replay_dir(sf_dir)
-    raw = (
-        spark.readStream.format("parquet")
-        .schema(spark.read.parquet(d).schema)
-        .option("maxFilesPerTrigger", "1")
-        .load(d)
-    )
-    if dict(raw.dtypes).get("ts") == "bigint":
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    # the nanos-era fixture reads as TIMESTAMP_NTZ; withWatermark
-    # requires TIMESTAMP — the session tz is pinned UTC, so the cast
+    # the fixture's ts reads as TIMESTAMP_NTZ; withWatermark requires
+    # TIMESTAMP — the session tz is pinned UTC, so the cast
     # reinterprets without moving any instant
+    raw = read_events_stream(spark, sf_dir, stream_dir=_late_replay_dir(sf_dir))
     raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
     # The stateful operator is a streaming DEDUP, deliberately NOT a
     # windowed aggregation: an aggregation partial-aggregates map-side
@@ -990,21 +920,8 @@ def watermark_lateness_run(
     agg = raw.withWatermark("ts", WATERMARK_LATENESS_DELAY).dropDuplicates(
         ["event_id", "ts"]
     )
-    if listener is not None:
-        spark.streams.addListener(listener)
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = agg.writeStream.format("noop").trigger(availableNow=True).start()
-        try:
-            q.awaitTermination()
-            progress = [json.loads(p.json) for p in q.recentProgress]
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        if listener is not None:
-            spark.streams.removeListener(listener)
+    q = run_stream(agg.writeStream.format("noop"), listener=listener)
+    progress = [json.loads(p.json) for p in q.recentProgress]
 
     rows = []
     seq = 0

@@ -29,21 +29,16 @@ batch rows to Python in one block, not per row.
 
 from __future__ import annotations
 
-import hashlib
-import itertools
-import os
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from trafik_etl_modular_spark.catalog import _ensure_session_confs, table_path
+from trafik_etl_modular_spark.catalog import _ensure_session_confs
+from trafik_etl_modular_spark.streaming.pipeline import _run_to_memory, stage_batches
 
 GAP_US = 1_800_000_000  # 30 minutes, microsecond-exact (cf. batch query)
-
-_SINK_IDS = itertools.count()
 
 _OUT_SCHEMA = (
     "user_id bigint, session_start_us bigint, last_ts_us bigint, n_events bigint"
@@ -54,7 +49,7 @@ _STATE_SCHEMA = "session_start_us bigint, last_ts_us bigint, n_events bigint"
 def stage_time_ordered_chunks(sf_dir: str, n_chunks: int = 2) -> str:
     """Stage the events fixture as n time-ordered parquet chunks so the
     file source delivers multiple micro-batches in event-time order
-    (one file per trigger, ascending mtimes).
+    (one file per trigger, ascending mtimes — :func:`stage_batches`).
 
     Two chunks by default: the MINIMUM that still exercises
     cross-batch session stitching (state carried over a batch
@@ -62,41 +57,30 @@ def stage_time_ordered_chunks(sf_dir: str, n_chunks: int = 2) -> str:
     pins.  Every extra micro-batch re-pays state-store open/commit
     per partition plus a per-group Python invocation round — pure
     fixed overhead at fixture scale, no additional coverage."""
+    import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    # v2: chunks carry int64-µs ts (unit normalized at staging time);
-    # chunk count is part of the staging key.
-    tag = hashlib.md5(f"{sf_dir}|{n_chunks}".encode()).hexdigest()[:10]
-    d = f"/tmp/trafik_sessionize_v2_{tag}"
-    done = os.path.join(d, "_DONE")
-    if os.path.exists(done):
-        return d
-    os.makedirs(d, exist_ok=True)
-    import pyarrow as pa
+    def build(src: str) -> list:
+        tbl = pq.read_table(src, columns=["event_id", "ts", "user_id"])
+        # Normalize ts to int64 MICROS at staging time (via
+        # timestamp[us], so a ns- or us-typed fixture both land on the
+        # same unit) — the stream schema declares `ts bigint` and the
+        # µs contract is explicit here instead of assumed from the
+        # fixture's physical type.
+        ts_us = pc.cast(pc.cast(tbl["ts"], pa.timestamp("us")), pa.int64())
+        tbl = tbl.set_column(tbl.schema.get_field_index("ts"), "ts", ts_us)
+        tbl = tbl.take(
+            pc.sort_indices(
+                tbl, sort_keys=[("ts", "ascending"), ("event_id", "ascending")]
+            )
+        )
+        per = -(-tbl.num_rows // n_chunks)
+        return [
+            (f"chunk_{i:03d}.parquet", tbl.slice(i * per, per)) for i in range(n_chunks)
+        ]
 
-    tbl = pq.read_table(
-        table_path(sf_dir, "events"),
-        columns=["event_id", "ts", "user_id"],
-    )
-    # Normalize ts to int64 MICROS at staging time (via timestamp[us],
-    # so a ns- or us-typed fixture both land on the same unit) — the
-    # stream schema below declares `ts bigint` and the µs contract is
-    # explicit here instead of assumed from the fixture's physical type.
-    ts_us = pc.cast(pc.cast(tbl["ts"], pa.timestamp("us")), pa.int64())
-    tbl = tbl.set_column(tbl.schema.get_field_index("ts"), "ts", ts_us)
-    tbl = tbl.take(
-        pc.sort_indices(tbl, sort_keys=[("ts", "ascending"), ("event_id", "ascending")])
-    )
-    n = tbl.num_rows
-    per = -(-n // n_chunks)
-    for i in range(n_chunks):
-        chunk = tbl.slice(i * per, per)
-        path = os.path.join(d, f"chunk_{i:03d}.parquet")
-        pq.write_table(chunk, path)
-        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
-    open(done, "w").close()
-    return d
+    return stage_batches(sf_dir, "events", f"sessionize{n_chunks}", build)
 
 
 def _sessionize_group(key, pdf_iter, state: GroupState):
@@ -180,37 +164,16 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-    name = f"sessionize_sink_{next(_SINK_IDS)}"
-    # State-store partition count is fixed at stream start from
-    # shuffle.partitions; size it to the key space rather than the
-    # session default (1.5k keys don't need 32 state stores — each
-    # store is a per-batch open/commit). Locally the win is small
-    # (per-GROUP Python invocation dominates this operator); at
-    # cluster scale the same override tracks keys-per-executor.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    # State-store partition count is fixed at stream start; size it to
+    # the key space rather than the session default (1.5k keys don't
+    # need 32 state stores — each store is a per-batch open/commit).
     # Re-tuned r7 after the numpy vectorization of the group fn moved
     # the bottleneck to per-group Python CALL dispatch: interleaved
     # medians at sf0.1 now 2: 6.4 s, 4: 4.8 s, 8: 3.4 s, 16: ≈8 (within
     # noise of 8).  8 pinned — more state partitions = more parallel
     # Python workers dispatching groups, until store open/commit
     # overhead wins again past ~16.
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            updates.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-    emitted = spark.sql(f"SELECT * FROM {name}")
+    emitted = _run_to_memory(updates, "update", state_partitions=8)
     # Emissions per session key are monotone in n_events → the final
     # session row is the max; then fold sessions to per-user stats.
     finals = emitted.groupBy("user_id", "session_start_us").agg(
