@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
 
 import pytest
 
@@ -729,7 +730,8 @@ def test_sentinel_stream_dir_invalidates_on_fixture_change(tmp_path):
     fixture at the same path with later timestamps reused a stale
     sentinel whose ts no longer advanced the watermark past the new
     data).  Each stager stages a 4-row fixture, then the same path
-    regrown to 10 later rows, and must serve the new rows."""
+    regrown to 10 later rows, and must serve the new rows and remove
+    the old staged dir."""
     import time
     from datetime import datetime, timedelta
 
@@ -774,11 +776,15 @@ def test_sentinel_stream_dir_invalidates_on_fixture_change(tmp_path):
     ]
     write_fixture(datetime(2024, 1, 1), 4)
     first = [stage(sf_dir) for stage, *_ in stagers]
-    write_fixture(datetime(2030, 6, 1), 10)
-    for d1, (stage, serves, old, new) in zip(first, stagers):
-        d2 = stage(sf_dir)
+    for d1, (_, serves, old, _) in zip(first, stagers):
         assert serves(d1) == old, d1
+    write_fixture(datetime(2030, 6, 1), 10)
+    for d1, (stage, serves, _, new) in zip(first, stagers):
+        d2 = stage(sf_dir)
         assert d2 != d1 and serves(d2) == new, f"{d2} serves the old fixture"
+        # publishing the new version removed the old one
+        assert not os.path.exists(d1), f"{d1} outlived its fixture"
+        shutil.rmtree(d2)
 
 
 def test_iter_listing_bounded_pages(tmp_path):

@@ -18,6 +18,7 @@ a directory derived from a fixture file.
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import os
 import shutil
@@ -88,19 +89,23 @@ def publish_dir(tmp: str, path: str) -> None:
 
 
 def staged_dir(src: str, tag: str, write: Callable[[str], None]) -> str:
-    """Return ``/tmp/trafik_<tag>_<hash>``, a directory derived from the
-    file ``src`` and built once: ``write(tmp)`` fills a fresh temp dir
-    and :func:`publish_dir` renames it into place, so a reader sees all
-    of it or none of it.  The key is ``src``'s path, mtime and size plus
-    ``tag``: a fixture regenerated at the same path gets a new
-    directory, never a stale one."""
+    """Return ``/tmp/trafik_<tag>_<source>_<version>``, a dir derived
+    from the file ``src`` and built once: ``write(tmp)`` fills a temp dir
+    that :func:`publish_dir` renames into place, so a reader sees all of
+    it or none.  ``<source>`` hashes ``src``'s path and ``tag``,
+    ``<version>`` its mtime and size: a fixture regenerated at the same
+    path gets a new dir, never a stale one, and the older ones go."""
     st = os.stat(src)
-    key = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|{tag}"
-    path = f"/tmp/trafik_{tag}_{hashlib.md5(key.encode()).hexdigest()[:10]}"
+    source = hashlib.md5(f"{os.path.abspath(src)}|{tag}".encode()).hexdigest()[:10]
+    version = hashlib.md5(f"{st.st_mtime_ns}|{st.st_size}".encode()).hexdigest()[:10]
+    path = f"/tmp/trafik_{tag}_{source}_{version}"
     if not os.path.isdir(path):
         tmp = f"{path}.tmp.{os.getpid()}"
         shutil.rmtree(tmp, ignore_errors=True)
         os.makedirs(tmp)
         write(tmp)
         publish_dir(tmp, path)
+        # ten characters after `<source>_`: other builders' temp dirs stay
+        for old in set(glob.glob(glob.escape(path[:-10]) + "?" * 10)) - {path}:
+            shutil.rmtree(old, ignore_errors=True)
     return path
