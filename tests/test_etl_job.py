@@ -4,7 +4,10 @@ anomaly guard."""
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
+from pyspark.sql import functions as F
 
 from trafik_etl_modular_spark.pipelines.etl_job import run_etl
 from trafik_etl_modular_spark.pipelines.ingest import make_county_dim
@@ -55,6 +58,85 @@ def test_etl_end_to_end_and_idempotent(spark, feed_dir, tmp_path):
     report2 = run_etl(spark, feed_dir, sink, dim)
     assert report2["rows"] == 8
     assert {r["incident_id"] for r in read_incidents(spark, sink).collect()} == set(got)
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` starts, counted by job group."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_and_report_start_no_jobs(spark, feed_dir, tmp_path, monkeypatch):
+    """``read_incidents`` starts no Spark job: the manifest gives the
+    schema and the file list.  ``run_etl``'s report adds none after the
+    MERGE: it sums the manifest's entries instead of scanning the table."""
+    from trafik_etl_modular_spark.pipelines import etl_job
+
+    sink = str(tmp_path / "incidents")
+    dim = make_county_dim(spark)
+    run_etl(spark, feed_dir, sink, dim)
+    assert _jobs(spark, lambda: read_incidents(spark, sink)) == 0
+
+    merge = etl_job.merge_into_incidents
+    after_merge = []
+
+    def counted_merge(*args, **kwargs):
+        merge(*args, **kwargs)
+        sc = spark.sparkContext
+        after_merge.append(f"report-{uuid.uuid4().hex}")
+        sc.setJobGroup(after_merge[0], "after the merge")
+
+    monkeypatch.setattr(etl_job, "merge_into_incidents", counted_merge)
+    through_merge = _jobs(spark, lambda: run_etl(spark, feed_dir, sink, dim))
+    assert spark.sparkContext.statusTracker().getJobIdsForGroup(after_merge[0]) == []
+    assert through_merge <= 10, f"{through_merge} jobs for one run_etl call"
+
+
+def _moved_page(p: int, start_day: str, modified_day: str) -> str:
+    """Page ``p`` of the feed with every start moved to ``start_day``
+    and a newer ``modified_day``: a new version of each of its keys."""
+    return (
+        PAGE_TMPL.format(p=p)
+        .replace(f"<StartTime>2024-01-1{p}", f"<StartTime>2024-01-{start_day}")
+        .replace(f"<ModifiedTime>2024-01-1{p}", f"<ModifiedTime>2024-01-{modified_day}")
+    )
+
+
+def test_report_equals_full_scan_after_moved_keys(spark, feed_dir, tmp_path):
+    """The report's rows/pagar/kommande, summed from the manifest, equal
+    a full scan of the sink after each of several MERGEs whose keys move
+    to other days, into the future (KOMMANDE) and back."""
+    sink = str(tmp_path / "incidents")
+    dim = make_county_dim(spark)
+    feeds = [
+        feed_dir,
+        {1: ("20", "15"), 2: ("05", "15")},  # page 1 → upcoming, page 2 → earlier day
+        {1: ("13", "16"), 3: ("21", "16")},  # page 1 back to the past, page 3 → upcoming
+    ]
+    for i, feed in enumerate(feeds):
+        if isinstance(feed, dict):
+            d = tmp_path / f"feed_{i}"
+            d.mkdir()
+            for p, (start, modified) in feed.items():
+                (d / f"page_{p:03d}.xml").write_text(_moved_page(p, start, modified))
+            feed = str(d)
+        report = run_etl(spark, feed, sink, dim)
+        scan = read_incidents(spark, sink)
+        ids = [r["incident_id"] for r in scan.select("incident_id").collect()]
+        assert len(ids) == len(set(ids)) == 8
+        full = scan.agg(
+            F.count("*").alias("rows"),
+            F.count_if(F.col("status") == "PÅGÅR").alias("pagar"),
+            F.count_if(F.col("status") == "KOMMANDE").alias("kommande"),
+        ).collect()[0]
+        assert {k: report[k] for k in ("rows", "pagar", "kommande")} == full.asDict(), i
+    assert report["kommande"] == 2
 
 
 def test_etl_respects_max_pages(spark, feed_dir, tmp_path):

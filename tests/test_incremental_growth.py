@@ -99,6 +99,7 @@ def test_ivf_append_growth_linear_in_batch(spark, tmp_path):
         ivf_assign,
         ivf_train,
     )
+    from trafik_etl_modular_spark.operators.table import read_table
 
     emb = load_table(spark, SF, "embeddings")
     centers = ivf_train(emb, n_centroids=8)
@@ -127,7 +128,7 @@ def test_ivf_append_growth_linear_in_batch(spark, tmp_path):
         # … and ≤ one new file per touched bucket
         assert len(now_files - prev_files) <= n_buckets
         prev_files = now_files
-        total = spark.read.parquet(f"{path}/assigned").count()
+        total = read_table(spark, f"{path}/assigned").count()
         sizes.append(total)
         # index grows by exactly the batch size
         expected = (sizes[-2] if len(sizes) > 1 else 0) + n_batch

@@ -186,9 +186,9 @@ def test_merge_evaluates_its_batch_once(spark, tmp_path):
 
 
 def test_merge_leaves_session_overwrite_mode_alone(spark, tmp_path):
-    """The MERGE's dynamic partition overwrite is scoped to its own
-    write: after a merge, the session conf is unchanged and a plain
-    overwrite of the table still replaces every partition."""
+    """A MERGE sets no session conf: after a merge, the partition
+    overwrite mode is unchanged, and a whole-table write still
+    replaces every partition."""
     from trafik_etl_modular_spark.pipelines.sink import (
         merge_into_incidents,
         read_incidents,
@@ -241,28 +241,27 @@ def test_centroid_udf_and_hybrid(spark):
 
 
 def test_compaction_reduces_files_preserves_data(spark, tmp_path):
-    from trafik_etl_modular_spark.operators.partitions import replace_partitions
+    from trafik_etl_modular_spark.operators.table import read_table, replace_partitions
 
     path = str(tmp_path / "fragmented")
     df = spark.createDataFrame(
         [(f"I{i}", "2024-01-10 08:00:00", float(i)) for i in range(500)],
         "incident_id string, start_time_utc string, v double",
     ).withColumn("start_time_utc", F.col("start_time_utc").cast("timestamp"))
-    # simulate many-small-files from repeated micro-batch merges
-    (
-        df.withColumn("event_date", F.to_date("start_time_utc"))
-        .repartition(12)
-        .write.partitionBy("event_date")
-        .parquet(path)
-    )
+    df = df.withColumn("event_date", F.to_date("start_time_utc"))
+    # simulate many-small-files from repeated micro-batch merges: 12
+    # appends, one file each
+    for k in range(12):
+        part = df.filter(F.abs(F.hash("incident_id")) % 12 == k)
+        replace_partitions(part, path, "event_date", [])
     before = glob.glob(os.path.join(path, "event_date=2024-01-10", "*.parquet"))
     assert len(before) == 12
 
-    replace_partitions(spark.read.parquet(path), path, "event_date", ["2024-01-10"])
+    replace_partitions(read_table(spark, path), path, "event_date", ["2024-01-10"])
     after = glob.glob(os.path.join(path, "event_date=2024-01-10", "*.parquet"))
     assert len(after) == 1
 
-    got = spark.read.parquet(path).collect()
+    got = read_table(spark, path).collect()
     assert len(got) == 500
     assert {r["incident_id"] for r in got} == {f"I{i}" for i in range(500)}
 
@@ -276,21 +275,25 @@ def _listing(path: str) -> list[str]:
     )
 
 
+def _bucketed(spark, n: int):
+    return spark.range(n).select(
+        F.col("id").alias("vec_id"), (F.col("id") % 4).cast("int").alias("ivf_bucket")
+    )
+
+
 def test_replace_partitions_int_layout(spark, tmp_path):
     """The IVF index layout (int partitions): the listed buckets get
     exactly the given rows, in place; a listed bucket whose rows are all
     gone leaves the layout (a fully tombstoned bucket under
     ``ivf_purge``); unlisted buckets keep their exact files."""
-    from trafik_etl_modular_spark.operators.partitions import replace_partitions
+    from trafik_etl_modular_spark.operators.table import read_table, replace_partitions
 
     path = str(tmp_path / "assigned")
-    spark.range(80).select(
-        F.col("id").alias("vec_id"), (F.col("id") % 4).cast("int").alias("ivf_bucket")
-    ).repartition(3).write.partitionBy("ivf_bucket").parquet(path)
+    replace_partitions(_bucketed(spark, 80), path, "ivf_bucket")
     kept = {b: sorted(os.listdir(f"{path}/ivf_bucket={b}")) for b in (0, 1)}
 
     # bucket 2 keeps half its rows, bucket 3 loses every row
-    rows = spark.read.parquet(path).filter(
+    rows = read_table(spark, path).filter(
         (F.col("ivf_bucket") == 2) & (F.col("vec_id") % 8 == 2)
     )
     replace_partitions(rows, path, "ivf_bucket", [2, 3])
@@ -298,7 +301,7 @@ def test_replace_partitions_int_layout(spark, tmp_path):
     assert {b: sorted(os.listdir(f"{path}/ivf_bucket={b}")) for b in (0, 1)} == kept
     assert not os.path.exists(f"{path}/ivf_bucket=3")
     assert len(glob.glob(f"{path}/ivf_bucket=2/*.parquet")) == 1
-    got = {(r["vec_id"], r["ivf_bucket"]) for r in spark.read.parquet(path).collect()}
+    got = {(r["vec_id"], r["ivf_bucket"]) for r in read_table(spark, path).collect()}
     assert got == {(i, i % 4) for i in range(80) if i % 4 < 2 or i % 8 == 2}
 
 
@@ -307,12 +310,10 @@ def test_replace_partitions_failed_write_leaves_table(spark, tmp_path):
     hidden ones included, and its rows are exactly as before."""
     from pyspark.errors import PythonException
 
-    from trafik_etl_modular_spark.operators.partitions import replace_partitions
+    from trafik_etl_modular_spark.operators.table import read_table, replace_partitions
 
     path = str(tmp_path / "assigned")
-    spark.range(40).select(
-        F.col("id").alias("vec_id"), (F.col("id") % 4).cast("int").alias("ivf_bucket")
-    ).write.partitionBy("ivf_bucket").parquet(path)
+    replace_partitions(_bucketed(spark, 40), path, "ivf_bucket")
     before = _listing(path)
 
     def check(vec_id):
@@ -320,14 +321,109 @@ def test_replace_partitions_failed_write_leaves_table(spark, tmp_path):
             raise ValueError("bad row")
         return vec_id
 
-    rows = spark.read.parquet(path).withColumn(
+    rows = read_table(spark, path).withColumn(
         "vec_id", F.udf(check, "long")("vec_id")
     )
     with pytest.raises(PythonException, match="bad row"):
         replace_partitions(rows, path, "ivf_bucket", [0, 1, 2, 3])
 
     assert _listing(path) == before
-    assert spark.read.parquet(path).count() == 40
+    assert read_table(spark, path).count() == 40
+
+
+def _moved_key_merge(spark, path: str):
+    """A two-day table, and a batch that moves A to a third day (leaving
+    its old day empty) and updates B in place."""
+    from trafik_etl_modular_spark.pipelines.sink import write_incidents
+
+    schema = "incident_id string, start_time_utc string, modified_time_utc string, v double"
+
+    def rows(*data):
+        return spark.createDataFrame(list(data), schema).withColumn(
+            "start_time_utc", F.col("start_time_utc").cast("timestamp")
+        )
+
+    write_incidents(
+        rows(
+            ("A", "2024-01-10 08:00:00", "2024-01-10 08:00:00", 1.0),
+            ("B", "2024-01-11 08:00:00", "2024-01-11 08:00:00", 2.0),
+        ),
+        path,
+    )
+    return rows(
+        ("A", "2024-01-12 08:00:00", "2024-01-12 00:00:00", 10.0),
+        ("B", "2024-01-11 08:00:00", "2024-01-12 00:00:00", 20.0),
+    )
+
+
+def _snapshot_only(path: str) -> bool:
+    """The table dir holds exactly its snapshot's files and one manifest."""
+    from trafik_etl_modular_spark.operators.table import MANIFEST, table_files
+
+    on_disk = {
+        os.path.relpath(os.path.join(d, f), path) for d, _, files in os.walk(path) for f in files
+    }
+    return on_disk == {e["file"] for e in table_files(path)} | {MANIFEST}
+
+
+def test_merge_crash_before_publish_keeps_previous_snapshot(spark, tmp_path, monkeypatch):
+    """A MERGE that fails after its new files are written but before its
+    manifest is published leaves the previous snapshot: one row per key,
+    the old versions.  The unpublished files stay invisible, and the
+    next commit deletes them."""
+    from trafik_etl_modular_spark.operators import table
+    from trafik_etl_modular_spark.pipelines.sink import merge_into_incidents, read_incidents
+
+    path = str(tmp_path / "incidents_tbl")
+    batch = _moved_key_merge(spark, path)
+    n_files = len(glob.glob(f"{path}/*/*.parquet"))
+
+    def crash(*args):
+        raise OSError("crash before publish")
+
+    monkeypatch.setattr(table, "_publish", crash)
+    with pytest.raises(OSError, match="crash before publish"):
+        merge_into_incidents(spark, path, batch)
+    assert len(glob.glob(f"{path}/*/*.parquet")) > n_files  # written, unpublished
+    got = [
+        (r["incident_id"], r["v"], str(r["event_date"]))
+        for r in read_incidents(spark, path).collect()
+    ]
+    assert sorted(got) == [("A", 1.0, "2024-01-10"), ("B", 2.0, "2024-01-11")]
+
+    monkeypatch.undo()
+    merge_into_incidents(spark, path, batch)
+    assert _snapshot_only(path)
+
+
+def test_merge_crash_after_publish_reads_new_snapshot(spark, tmp_path, monkeypatch):
+    """A MERGE that fails after publishing its manifest but before
+    deleting the files it dropped reads as the new snapshot, one row
+    per key.  The next commit deletes the leftovers, so after it the
+    dir holds only the snapshot's files and one manifest."""
+    from trafik_etl_modular_spark.operators import table
+    from trafik_etl_modular_spark.pipelines.sink import merge_into_incidents, read_incidents
+
+    path = str(tmp_path / "incidents_tbl")
+    batch = _moved_key_merge(spark, path)
+
+    def crash(*args):
+        raise OSError("crash after publish")
+
+    monkeypatch.setattr(table, "_sweep", crash)
+    with pytest.raises(OSError, match="crash after publish"):
+        merge_into_incidents(spark, path, batch)
+    assert os.path.exists(f"{path}/event_date=2024-01-10")  # dropped, not yet deleted
+    got = [
+        (r["incident_id"], r["v"], str(r["event_date"]))
+        for r in read_incidents(spark, path).collect()
+    ]
+    assert sorted(got) == [("A", 10.0, "2024-01-12"), ("B", 20.0, "2024-01-11")]
+
+    monkeypatch.undo()
+    merge_into_incidents(spark, path, batch)
+    assert _snapshot_only(path)
+    assert not os.path.exists(f"{path}/event_date=2024-01-10")
 
 
 def test_conform_schema_repairs_drift(spark):
@@ -520,66 +616,6 @@ def test_run_stream_restores_confs_and_listener_on_failure(spark, tmp_path):
     assert len(listeners()) == n_listeners
 
 
-def test_landing_sink_two_phase_commit(spark, tmp_path):
-    """Streaming sink with manifest-based commit: readers see exactly
-    the committed micro-batches; stray task files without a manifest
-    entry are invisible (torn/aborted batches can't leak)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from trafik_etl_modular_spark.sources.landing_sink import (
-        committed_files,
-        read_committed,
-        register_landing_sink,
-    )
-
-    register_landing_sink(spark)
-    src_dir = tmp_path / "src"
-    src_dir.mkdir()
-    out_dir = str(tmp_path / "landing")
-    # two source files → two micro-batches (maxFilesPerTrigger=1)
-    for i in range(2):
-        pq.write_table(
-            pa.table({"event_id": list(range(i * 10, i * 10 + 10))}),
-            str(src_dir / f"part{i}.parquet"),
-        )
-
-    q = (
-        spark.readStream.schema("event_id bigint")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src_dir))
-        .writeStream.format("landing_zone")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
-
-    import os
-
-    manifests = [f for f in os.listdir(out_dir) if f.endswith(".manifest")]
-    assert len(manifests) == 2  # one atomic publish per micro-batch
-    out = read_committed(spark, out_dir)
-    assert sorted(r.event_id for r in out.collect()) == list(range(20))
-
-    # a torn write (task file with no manifest entry) stays invisible
-    pq.write_table(pa.table({"event_id": [999]}), os.path.join(out_dir, "task-orphan.parquet"))
-    assert "task-orphan.parquet" not in committed_files(out_dir)
-    assert read_committed(spark, out_dir).count() == 20
-
-    # the manifest log is a version history: as-of batch 0 sees only
-    # the first micro-batch (snapshot read / time travel). Which
-    # source file became batch 0 is listing-order dependent — assert
-    # the snapshot is exactly one whole micro-batch, not which one.
-    v0 = read_committed(spark, out_dir, as_of_batch=0)
-    got = sorted(r.event_id for r in v0.collect())
-    assert got in (list(range(10)), list(range(10, 20)))
-
-
 def test_export_training_shards_caps_and_roundtrips(spark, tmp_path):
     """JSONL shard export: every shard file holds at most the cap,
     the read-back content equals the input, and range ordering yields
@@ -640,68 +676,6 @@ def test_export_training_shards_range_ordered(spark, tmp_path):
     intervals.sort()
     for (a_lo, a_hi), (b_lo, b_hi) in zip(intervals, intervals[1:]):
         assert a_hi < b_lo, intervals
-
-
-def test_landing_zone_vacuum_retention(spark, tmp_path):
-    """VACUUM keeps the newest N batches readable, removes superseded
-    manifests + their now-unreferenced files, reclaims stale orphans,
-    and spares young orphans (in-flight commit protection)."""
-    import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from trafik_etl_modular_spark.sources.landing_sink import (
-        read_committed,
-        register_landing_sink,
-        vacuum_landing_zone,
-    )
-
-    register_landing_sink(spark)
-    src_dir = tmp_path / "src"
-    src_dir.mkdir()
-    out_dir = str(tmp_path / "landing")
-    for i in range(3):
-        pq.write_table(
-            pa.table({"event_id": list(range(i * 10, i * 10 + 10))}),
-            str(src_dir / f"part{i}.parquet"),
-        )
-    q = (
-        spark.readStream.schema("event_id bigint")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src_dir))
-        .writeStream.format("landing_zone")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
-
-    # plant one STALE orphan (no manifest references it) and one
-    # YOUNG orphan (inside the grace period)
-    stale = os.path.join(out_dir, "task-deadbeef.parquet")
-    young = os.path.join(out_dir, "task-cafebabe.parquet")
-    for p in (stale, young):
-        pq.write_table(pa.table({"event_id": [999]}), p)
-    os.utime(stale, (time.time() - 7200, time.time() - 7200))
-
-    stats = vacuum_landing_zone(out_dir, keep_batches=1, orphan_grace_s=3600)
-    assert stats["removed_manifests"] == 2
-    assert stats["removed_files"] == 2          # batches 0 and 1, one file each
-    assert stats["removed_orphans"] == 1        # stale only
-    assert stats["kept_batches"] == 1
-    assert os.path.exists(young) and not os.path.exists(stale)
-
-    # latest batch still reads; retained window holds exactly ONE
-    # batch's decade of rows (source-file batch order is mtime-based
-    # and not deterministic across runs)
-    got = sorted(r["event_id"] for r in read_committed(spark, out_dir).collect())
-    assert len(got) == 10 and got == list(range(got[0], got[0] + 10))
 
 
 def _staged_rows(d: str) -> int:
@@ -785,29 +759,3 @@ def test_sentinel_stream_dir_invalidates_on_fixture_change(tmp_path):
         # publishing the new version removed the old one
         assert not os.path.exists(d1), f"{d1} outlived its fixture"
         shutil.rmtree(d2)
-
-
-def test_iter_listing_bounded_pages(tmp_path):
-    """The landing zone's listing iterator: lexicographic order,
-    complete coverage, and bounded pages (the object-store
-    ListObjectsV2 contract) — including deletion of already-yielded
-    names mid-iteration, which vacuum relies on."""
-    import os
-
-    from trafik_etl_modular_spark.sources.landing_sink import iter_listing
-
-    d = str(tmp_path)
-    names = [f"task-{i:04d}.parquet" for i in range(57)]
-    for n in names:
-        open(os.path.join(d, n), "w").close()
-    open(os.path.join(d, "_batch_0000000001.manifest"), "w").close()
-
-    got = list(iter_listing(d, suffix=".parquet", prefix="task-", page_size=10))
-    assert got == names  # sorted, complete, manifest excluded
-
-    # deleting yielded names while paginating must not skip anything
-    seen = []
-    for n in iter_listing(d, suffix=".parquet", prefix="task-", page_size=7):
-        seen.append(n)
-        os.remove(os.path.join(d, n))
-    assert seen == names

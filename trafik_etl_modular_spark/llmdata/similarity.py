@@ -17,10 +17,12 @@ oracle comparison.
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from trafik_etl_modular_spark.operators.partitions import replace_partitions
+from trafik_etl_modular_spark.operators.table import read_table, replace_partitions, table_files
 
 
 def to_double_array(col: Column | str) -> Column:
@@ -447,14 +449,14 @@ def ivf_append(assigned_batch: DataFrame, path: str) -> None:
     The batch is hash-repartitioned on the bucket first, so each
     bucket's rows land in one task and each append adds at most one
     file per bucket (small-file growth is O(appends·buckets), bounded
-    by compaction cadence, not tasks).
+    by compaction cadence, not tasks).  The append commits one
+    manifest that lists the old files and the new ones.
     Drift between appends and the frozen quantizer is OBSERVABLE, not
     silent: the occupancy drift report (queries/llmdata.py::
     sim_ivf_incremental_append) flags cells whose appended share
     crosses the retrain threshold."""
-    assigned_batch.repartition("ivf_bucket").write.mode("append").partitionBy(
-        "ivf_bucket"
-    ).parquet(f"{path}/assigned")
+    # replaces no bucket: the batch's files join the snapshot
+    replace_partitions(assigned_batch, f"{path}/assigned", "ivf_bucket", [])
 
 
 # ---------------------------------------------------------------------------
@@ -639,18 +641,8 @@ def pq_reconstruct(codes_col: str, codebooks) -> Column:
 
 def ivf_bucket_files(path: str) -> dict[int, int]:
     """Per-bucket data-file count of a persisted index — the metadata
-    a compaction planner reads (at lake scale this is the table
-    catalog / manifest listing, not a recursive filesystem walk)."""
-    import glob
-    import os
-
-    counts: dict[int, int] = {}
-    for d in glob.glob(os.path.join(path, "assigned", "ivf_bucket=*")):
-        b = int(os.path.basename(d).split("=", 1)[1])
-        counts[b] = len(
-            [f for f in os.listdir(d) if f.endswith(".parquet") or f.startswith("part-")]
-        )
-    return counts
+    a compaction planner reads, from the index's manifest."""
+    return dict(Counter(int(e["value"]) for e in table_files(f"{path}/assigned")))
 
 
 def ivf_compact(
@@ -676,14 +668,12 @@ def ivf_compact(
     (pytest-asserted).
 
     ``out_path=None`` compacts IN PLACE through
-    :func:`~trafik_etl_modular_spark.operators.partitions.replace_partitions`
-    of each over-threshold bucket's own rows: Spark's per-partition
-    commit swaps each rewritten bucket directory in at job commit, so
-    a probe listing a bucket sees its old files or its new single
-    file; the swap is per bucket, never across buckets.  With
-    ``out_path`` the compacted buckets are materialized side-by-side
-    (used by the registered report query so the shared fixture index
-    stays immutable).
+    :func:`~trafik_etl_modular_spark.operators.table.replace_partitions`
+    of each over-threshold bucket's own rows: one manifest commit, so
+    a probe reads every bucket's old files or every rewritten bucket's
+    new single file.  With ``out_path`` the compacted buckets are
+    materialized side-by-side (used by the registered report query so
+    the shared fixture index stays immutable).
 
     Returns [(bucket, files_before, files_after)] sorted by bucket,
     covering every bucket (untouched ones report unchanged counts).
@@ -692,7 +682,7 @@ def ivf_compact(
     over = sorted(b for b, n in before.items() if n > max_files_per_bucket)
     dest = out_path if out_path is not None else path
     if over:
-        src = spark.read.parquet(f"{path}/assigned")
+        src = read_table(spark, f"{path}/assigned")
         replace_partitions(
             src.filter(F.col("ivf_bucket").isin(over)),
             f"{dest}/assigned",
@@ -731,15 +721,15 @@ def ivf_purge(
     tombstoned disappears from the layout entirely (directory-level
     retirement, the zero-count rule of the signed-fold family).
 
-    ``out_path=None`` purges IN PLACE through the same per-bucket
-    :func:`~trafik_etl_modular_spark.operators.partitions.replace_partitions`
-    as :func:`ivf_compact`; with ``out_path`` the purged buckets
+    ``out_path=None`` purges IN PLACE through the same
+    :func:`~trafik_etl_modular_spark.operators.table.replace_partitions`
+    commit as :func:`ivf_compact`; with ``out_path`` the purged buckets
     materialize side-by-side (the registered report query uses this
     so the shared fixture index stays immutable).
 
     Returns [(bucket, n_tombstoned)] for touched buckets, sorted.
     """
-    src = spark.read.parquet(f"{path}/assigned")
+    src = read_table(spark, f"{path}/assigned")
     tomb = tombstones.select(F.col(id_col))
     touched = (
         src.select(id_col, "ivf_bucket")
@@ -777,25 +767,22 @@ def ivf_write_index(
     centroid table.  Index build is a one-time offline job; probes
     read the persisted layout.
 
-    The assigned side is repartitioned by bucket before the write so
-    each partition directory holds one file instead of one per task
-    (tasks × buckets small files otherwise — metadata poison for the
-    probes' pruned listing).  The centroid table is k driver-local
-    rows of model metadata — written directly with pyarrow, because
-    routing 16 rows through spark.createDataFrame().write costs a
-    pickle-RDD Python-worker round trip (~4 s measured) for no
-    distribution benefit."""
+    The assigned side is committed through
+    :func:`~trafik_etl_modular_spark.operators.table.replace_partitions`,
+    which repartitions it by bucket, so each partition directory holds
+    one file instead of one per task (tasks × buckets small files
+    otherwise — metadata poison for the probes' pruned scan).  The
+    centroid table is k driver-local rows of model metadata — written
+    directly with pyarrow, because routing 16 rows through
+    spark.createDataFrame().write costs a pickle-RDD Python-worker
+    round trip (~4 s measured) for no distribution benefit."""
     import os
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     rows = centroids.collect()
-    # One shuffle partition per bucket (k, not the session's 32): each
-    # bucket directory gets exactly one writer task → one file.
-    assigned.repartition(max(len(rows), 1), "ivf_bucket").write.mode(
-        "overwrite"
-    ).partitionBy("ivf_bucket").parquet(f"{path}/assigned")
+    replace_partitions(assigned, f"{path}/assigned", "ivf_bucket")
     table = pa.table(
         {
             "ivf_bucket": pa.array([r["ivf_bucket"] for r in rows], pa.int32()),
@@ -813,7 +800,7 @@ def ivf_write_index(
 
 def ivf_read_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
     """Read a persisted IVF index written by :func:`ivf_write_index`."""
-    return spark.read.parquet(f"{path}/assigned"), spark.read.parquet(
+    return read_table(spark, f"{path}/assigned"), spark.read.parquet(
         f"{path}/centroids"
     )
 

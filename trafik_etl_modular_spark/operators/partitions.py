@@ -1,4 +1,4 @@
-"""Partition-shape and partition-rewrite helpers.
+"""Partition-shape and directory-publish helpers.
 
 :func:`fan_out` widens a narrow scan for CPU-heavy operators: a single
 small parquet file scans as ONE partition, which serializes
@@ -8,12 +8,10 @@ of the whole MinHash pipeline at sf0.1 on local[32].  At lake scale
 the scan already yields ≥ cores partitions and it no-ops, costing
 nothing.
 
-:func:`replace_partitions` is the engine's one "replace these
-partitions of a partitioned parquet table" (the pure-parquet MERGE of
-SURVEY §7.1/§7.4): the sink's MERGE and the IVF index's compaction and
-purge all call it.  :func:`publish_dir` is the one publish step of a
-build-once warehouse artifact, and :func:`staged_dir` the one build of
-a directory derived from a fixture file.
+:func:`publish_dir` is the one publish step of a build-once warehouse
+artifact, and :func:`staged_dir` the one build of a directory derived
+from a fixture file.  Partitioned tables are written through
+:mod:`~trafik_etl_modular_spark.operators.table`.
 """
 
 from __future__ import annotations
@@ -25,7 +23,6 @@ import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -41,39 +38,6 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-
-def replace_partitions(rows: DataFrame, path: str, col: str, values: list) -> None:
-    """Make ``rows`` the whole content of the ``col`` partitions
-    ``values`` of the parquet table at ``path``; other partitions keep
-    their files byte-for-byte.
-
-    One dynamic partition overwrite, as a per-write option (the session
-    conf is untouched, so a plain overwrite elsewhere still replaces
-    the whole table).  ``rows`` is repartitioned on ``col`` first, so
-    each value is written by one task into one file.  ``rows`` may read
-    ``path`` itself: the write stages its files and only swaps a
-    partition directory in at job commit, after every task has read
-    its input.  A failed job commits nothing.  The overwrite replaces
-    only partitions that received rows, so each listed partition that
-    still holds one of its old files afterwards got none — all its
-    rows are gone — and is removed.
-
-    Not atomic over plain parquet: the commit swaps partition
-    directories one at a time, so a crash mid-commit can leave some
-    partitions replaced and others not."""
-    dirs = [os.path.join(path, f"{col}={v}") for v in values]
-    before = {d: set(os.listdir(d)) for d in dirs if os.path.isdir(d)}
-    (
-        rows.repartition(F.col(col))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(col)
-        .parquet(path)
-    )
-    for d, files in before.items():
-        if files & set(os.listdir(d)):
-            shutil.rmtree(d)
 
 
 def publish_dir(tmp: str, path: str) -> None:

@@ -11,7 +11,8 @@ Reference lifecycle reproduced end-to-end:
   load      — partition-scoped MERGE into the date-partitioned table
               (S5/S6; idempotent — re-running the same feed is a
               no-op by latest-wins)
-  report    — single-pass KPI aggregation (A4) + the row-volume
+  report    — the published table's KPIs (A4), summed from the
+              sink's manifest without a scan + the row-volume
               anomaly guard on THIS run's batch rows (reference
               cli.py:20-21,94-99: warn when outside [expect_min,
               expect_max]) + wall-clock seconds (F19)
@@ -23,7 +24,6 @@ is the notification payload; emitting it is the caller's concern.
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -36,11 +36,8 @@ from trafik_etl_modular_spark.pipelines.ingest import (  # noqa: F401
     ingest,
     read_feed,
 )
-from trafik_etl_modular_spark.pipelines.sink import (
-    conform_schema,
-    merge_into_incidents,
-    read_incidents,
-)
+from trafik_etl_modular_spark.operators.table import table_files
+from trafik_etl_modular_spark.pipelines.sink import conform_schema, merge_into_incidents
 from trafik_etl_modular_spark.streaming.observability import check_row_volume
 
 # The 13-column public schema (reference load_sqlite.py:6-41 — DDL +
@@ -81,8 +78,8 @@ def run_etl(
     # CollectMetrics evaluates as rows stream past, so the update
     # batch is NEVER re-scanned for its row count / null-coord tally
     # (at 100 TB a second pass over the batch is real money).  The
-    # dashboard KPI below is different: it measures the PUBLISHED
-    # table, so it must read the sink.
+    # dashboard KPI below measures the PUBLISHED table instead, read
+    # from the sink's manifest.
     obs = Observation("ingest_batch")
     # coalesce inside the observe expression: SUM over an EMPTY batch
     # is NULL (not 0), and int(None) would blow up the report below.
@@ -96,21 +93,12 @@ def run_etl(
     merge_into_incidents(spark, sink_path, updates)
     batch_metrics = obs.get if obs.get else {"batch_rows": 0, "batch_null_coords": 0}
 
-    # A4 — one-pass KPI aggregation over the published table.  A
-    # first run that ingested nothing published no table.
-    kpi = {"rows": 0, "pagar": 0, "kommande": 0}
-    if os.path.exists(sink_path):
-        kpi = (
-            read_incidents(spark, sink_path)
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum(F.when(F.col("status") == "PÅGÅR", 1).otherwise(0)).alias("pagar"),
-                F.sum(F.when(F.col("status") == "KOMMANDE", 1).otherwise(0)).alias(
-                    "kommande"
-                ),
-            )
-            .collect()[0]
-        )
+    # A4 — the published table's KPIs, summed from its manifest: each
+    # file's entry carries its row and status counts, so the report
+    # scans nothing.  A first run that ingested nothing published no
+    # table and reads zero.
+    files = table_files(sink_path)
+    kpi = {k: sum(e[k] for e in files) for k in ("rows", "pagar", "kommande")}
     batch_rows = int(batch_metrics.get("batch_rows") or 0)
     corrupt = int(feed_obs.get.get("corrupt_records") or 0)
     warnings = [f"{corrupt} malformed feed record(s) skipped"] if corrupt else []

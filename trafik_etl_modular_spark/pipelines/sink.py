@@ -15,8 +15,11 @@ Layout decisions (§7.1):
     (union + latest-wins within those), not the whole table — the
     pure-parquet equivalent of Delta `MERGE INTO`, with rewrite
     volume ∝ touched partitions, one row per key and one execution
-    of the batch.  The rewrite is `operators.partitions.
-    replace_partitions`, which is NOT atomic over plain parquet.
+    of the batch.
+  * every write commits one manifest (`operators.table`), so a reader
+    sees the whole MERGE or none of it.  Each file's entry also
+    counts its rows by status, so the ETL report sums the manifest
+    instead of scanning the table.
 """
 
 from __future__ import annotations
@@ -26,24 +29,28 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from trafik_etl_modular_spark.operators.partitions import replace_partitions
+from trafik_etl_modular_spark.operators.table import read_table, replace_partitions, table_files
 from trafik_etl_modular_spark.queries.dedup import latest_wins
+
+
+def _status_tallies(df: DataFrame) -> dict[str, str]:
+    """The report's per-status counts, kept on each manifest entry of a
+    table that has a `status` column."""
+    if "status" not in df.columns:
+        return {}
+    return {"pagar": "status = 'PÅGÅR'", "kommande": "status = 'KOMMANDE'"}
 
 
 def write_incidents(df: DataFrame, path: str) -> None:
     """Initial load: replace the table with `df`, date-partitioned,
     one file per date."""
-    (
-        df.withColumn("event_date", F.to_date("start_time_utc"))
-        .repartition(F.col("event_date"))
-        .write.mode("overwrite")
-        .partitionBy("event_date")
-        .parquet(path)
-    )
+    rows = df.withColumn("event_date", F.to_date("start_time_utc"))
+    replace_partitions(rows, path, "event_date", None, **_status_tallies(rows))
 
 
 def read_incidents(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """The committed snapshot; starts no Spark job."""
+    return read_table(spark, path)
 
 
 def merge_into_incidents(
@@ -66,19 +73,19 @@ def merge_into_incidents(
     3. read ONLY those partitions (partition pruning via the filter);
     4. union + latest-wins on the key;
     5. ``replace_partitions`` the rewrite set with the result, lazily
-       (the write reads the partitions it replaces; the dynamic
-       overwrite swaps them in only at job commit).  A rewrite-set
-       partition whose keys all moved to another day gets no rows and
-       is removed.  Over plain parquet this is NOT atomic: a crash
-       mid-commit can leave some partitions rewritten and others not.
+       (the write reads the files it replaces; they are deleted only
+       after the commit).  A rewrite-set partition whose keys all
+       moved to another day gets no rows and leaves the table.  The
+       commit is one manifest rename: a crash before it leaves the
+       previous snapshot, a crash after it the new one.
     """
     upd = (
         updates.withColumn("event_date", F.to_date("start_time_utc"))
         .withColumn("__src", F.lit(1))
         .localCheckpoint(eager=True)
     )
-    # A table not yet written merges like an empty one.
-    table = read_incidents(spark, path) if os.path.exists(path) else upd.limit(0)
+    # A table with nothing committed merges like an empty one.
+    table = read_incidents(spark, path) if table_files(path) else upd.limit(0)
     held = table.join(F.broadcast(upd.select(key)), key, "left_semi")
     dates = upd.select("event_date").union(held.select("event_date"))
     touched = [r[0] for r in dates.distinct().collect()]
@@ -89,7 +96,7 @@ def merge_into_incidents(
     merged = existing.unionByName(upd, allowMissingColumns=True)
     ordering = [F.desc(c) for c in order_cols] + [F.desc("__src")]
     resolved = latest_wins(merged, [key], ordering).drop("__src")
-    replace_partitions(resolved, path, "event_date", touched)
+    replace_partitions(resolved, path, "event_date", touched, **_status_tallies(resolved))
 
 
 def conform_schema(df: DataFrame, ddl: str) -> DataFrame:

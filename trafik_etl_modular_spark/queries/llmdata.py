@@ -65,6 +65,7 @@ from trafik_etl_modular_spark.llmdata.text import (
 from trafik_etl_modular_spark.functions.scalars import fquant, oracle_fquant
 from trafik_etl_modular_spark.operators.grouped import percent_rank_by_group
 from trafik_etl_modular_spark.operators.partitions import publish_dir, staged_dir
+from trafik_etl_modular_spark.operators.table import read_table
 from trafik_etl_modular_spark.queries.common import t
 from trafik_etl_modular_spark.registry import query
 
@@ -1769,18 +1770,23 @@ def _embeddings_fingerprint(sf_dir: str) -> str:
 # repair in _train_unit_kmeans; v3: md5-ordered training sample so
 # the probe oracle can re-derive training outside the engine).
 _IVF_TRAINER_VERSION = 3
+# Bump when the persisted layout changes: an index (and the -appended,
+# -purged and -pq dirs derived from its path) in an older layout is
+# rebuilt, never read (manifest: committed through operators.table).
+_IVF_LAYOUT = "manifest"
 
 
 def _ivf_index_path(spark, sf_dir: str) -> str:
     """Index location anchored to the session's warehouse dir (not the
-    cwd) and keyed by sf_dir + data fingerprint + trainer version."""
+    cwd) and keyed by sf_dir + data fingerprint + trainer version +
+    layout."""
     import hashlib
     import os
     from urllib.parse import urlparse
 
     wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
     tag = hashlib.sha256(
-        f"{sf_dir}|{_embeddings_fingerprint(sf_dir)}|v{_IVF_TRAINER_VERSION}".encode()
+        f"{sf_dir}|{_embeddings_fingerprint(sf_dir)}|v{_IVF_TRAINER_VERSION}|{_IVF_LAYOUT}".encode()
     ).hexdigest()[:12]
     return os.path.join(wh, "ivf_index", tag)
 
@@ -1821,7 +1827,7 @@ def _ivf_ensure_index(spark, sf_dir: str):
     # createDataFrame mirror keeps the (assigned, centroids) API.
     import pyarrow.parquet as pq
 
-    assigned = spark.read.parquet(f"{path}/assigned")
+    assigned = read_table(spark, f"{path}/assigned")
     ctbl = pq.read_table(f"{path}/centroids")
     rows = [
         (int(b), [float(x) for x in c])
@@ -2447,11 +2453,11 @@ def sim_ivf_compact(spark, sf_dir):
     # post-compaction layout, exactly as a probe would read it after
     # the atomic swap: rewritten buckets from compacted/, the rest
     # from the appended index (both reads partition-pruned)
-    appended = spark.read.parquet(f"{path}/assigned")
+    appended = read_table(spark, f"{path}/assigned")
     post = appended.filter(~F.col("ivf_bucket").isin(compacted_buckets))
     if compacted_buckets:
         post = post.unionByName(
-            spark.read.parquet(f"{path}/compacted/assigned").filter(
+            read_table(spark, f"{path}/compacted/assigned").filter(
                 F.col("ivf_bucket").isin(compacted_buckets)
             )
         )
@@ -2677,14 +2683,14 @@ def sim_ivf_purge_compact(spark, sf_dir):
     apath, ppath = _ivf_ensure_purged_index(spark, sf_dir)
     meta = spark.read.parquet(os.path.join(ppath, "report.parquet"))
     purged_buckets = [int(r["ivf_bucket"]) for r in meta.collect()]  # ≤16 rows
-    appended = spark.read.parquet(f"{apath}/assigned")
+    appended = read_table(spark, f"{apath}/assigned")
     before = appended.groupBy("ivf_bucket").agg(
         F.count("*").cast("bigint").alias("n_before")
     )
     post = appended.filter(~F.col("ivf_bucket").isin(purged_buckets))
-    if purged_buckets and os.path.exists(f"{ppath}/assigned"):
+    if purged_buckets:
         post = post.unionByName(
-            spark.read.parquet(f"{ppath}/assigned").filter(
+            read_table(spark, f"{ppath}/assigned").filter(
                 F.col("ivf_bucket").isin(purged_buckets)
             )
         )
