@@ -95,7 +95,7 @@ def test_read_and_report_start_no_jobs(spark, feed_dir, tmp_path, monkeypatch):
     monkeypatch.setattr(etl_job, "merge_into_incidents", counted_merge)
     through_merge = _jobs(spark, lambda: run_etl(spark, feed_dir, sink, dim))
     assert spark.sparkContext.statusTracker().getJobIdsForGroup(after_merge[0]) == []
-    assert through_merge <= 10, f"{through_merge} jobs for one run_etl call"
+    assert through_merge <= 8, f"{through_merge} jobs for one run_etl call"
 
 
 def _moved_page(p: int, start_day: str, modified_day: str) -> str:

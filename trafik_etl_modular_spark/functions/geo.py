@@ -74,14 +74,15 @@ def wkt_centroid(wkt: pd.Series) -> pd.DataFrame:
     )
 
 
-def centroid_lat_lon(geom: Column | str) -> tuple[Column, Column]:
-    """Hybrid F4/F5: POINTs stay JVM-side (regexp, codegen'd); only
-    non-POINT geometries pay the Arrow round-trip."""
+def centroid_lat_lon(geom: str) -> tuple[Column, Column]:
+    """Hybrid F4/F5 over the column named ``geom``: POINTs stay JVM-side
+    (regexp, codegen'd); only non-POINT geometries pay the Arrow
+    round-trip."""
     from trafik_etl_modular_spark.functions.scalars import wkt_point_lat, wkt_point_lon
 
-    c = F.col(geom) if isinstance(geom, str) else geom
+    c = F.col(geom)
     is_point = c.startswith("POINT ")
     cent = wkt_centroid(F.when(~is_point, c))
-    lat = F.when(is_point, wkt_point_lat(c)).otherwise(cent.getField("lat"))
-    lon = F.when(is_point, wkt_point_lon(c)).otherwise(cent.getField("lon"))
+    lat = F.when(is_point, F.expr(wkt_point_lat(geom))).otherwise(cent.getField("lat"))
+    lon = F.when(is_point, F.expr(wkt_point_lon(geom))).otherwise(cent.getField("lon"))
     return lat, lon

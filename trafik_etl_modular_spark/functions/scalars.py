@@ -81,17 +81,19 @@ def oracle_davg(expr: str, scale: int = 4) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Timestamps (F1, F2, F14)
+# The ingest scalars (F1, F3, F4, O1) are Spark SQL text over SQL
+# operands (a column name or an expression), so a pipeline stage fuses
+# them into one ``selectExpr``: one analysed projection instead of a
+# py4j call per Column node.  ``F.expr`` turns one into a Column.
 # ---------------------------------------------------------------------------
 
 
-def parse_iso_utc(col: Column | str) -> Column:
+def parse_iso_utc(col: str) -> str:
     """F1 — ISO-8601 string (optionally 'Z'-suffixed) → UTC timestamp,
     NULL on unparseable input (reference: transform.py:18-23 returns
     None on failure). `try_to_timestamp`, because Spark 4 defaults to
     ANSI mode where a plain cast would throw on garbage."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.try_to_timestamp(F.regexp_replace(c, "Z$", "+00:00"))
+    return f"try_to_timestamp(regexp_replace({col}, 'Z$', '+00:00'))"
 
 
 def fmt_utc_z(col: Column | str) -> Column:
@@ -101,12 +103,7 @@ def fmt_utc_z(col: Column | str) -> Column:
     return F.date_format(c, "yyyy-MM-dd'T'HH:mm:ss'Z'")
 
 
-# ---------------------------------------------------------------------------
-# Status derivation (F3) and ranking (O1)
-# ---------------------------------------------------------------------------
-
-
-def derive_status(start: Column, end: Column, now: Column) -> Column:
+def derive_status(start: str, end: str, now: str) -> str:
     """F3 — CASE WHEN over event time vs injected `now`
     (reference: transform.py:68-73):
 
@@ -116,40 +113,35 @@ def derive_status(start: Column, end: Column, now: Column) -> Column:
         callers drop it, mirroring the reference's P3 drop)
     """
     return (
-        F.when(start > now, F.lit(STATUS_UPCOMING))
-        .when((start <= now) & (end.isNull() | (end > now)), F.lit(STATUS_ONGOING))
-        .otherwise(F.lit(None).cast("string"))
+        f"CASE WHEN ({start}) > ({now}) THEN '{STATUS_UPCOMING}' "
+        f"WHEN ({start}) <= ({now}) AND (({end}) IS NULL OR ({end}) > ({now})) "
+        f"THEN '{STATUS_ONGOING}' END"
     )
 
 
-def status_rank(status: Column | str) -> Column:
+def status_rank(status: str) -> str:
     """O1 — custom sort key {PÅGÅR:0, KOMMANDE:1, other:9}
     (reference: transform.py:120-127)."""
-    c = F.col(status) if isinstance(status, str) else status
     return (
-        F.when(c == STATUS_ONGOING, F.lit(0))
-        .when(c == STATUS_UPCOMING, F.lit(1))
-        .otherwise(F.lit(9))
+        f"CASE WHEN ({status}) = '{STATUS_ONGOING}' THEN 0 "
+        f"WHEN ({status}) = '{STATUS_UPCOMING}' THEN 1 ELSE 9 END"
     )
 
 
-# ---------------------------------------------------------------------------
-# Geo (F4) — WKT POINT fast path, pure regexp (JVM-side)
-# ---------------------------------------------------------------------------
+# F4 — WKT POINT fast path, pure regexp (JVM-side).  Brackets instead of
+# backslashes, so the pattern reads the same under either setting of
+# spark.sql.parser.escapedStringLiterals.
+_WKT_POINT = "^POINT [(]([-+]?[0-9.]+) ([-+]?[0-9.]+)[)]$"
 
-_WKT_POINT = r"^POINT \(([-+]?[0-9.]+) ([-+]?[0-9.]+)\)$"
 
-
-def wkt_point_lon(col: Column | str) -> Column:
+def wkt_point_lon(col: str) -> str:
     """F4 — `POINT (lon lat)` → lon double (reference: endpoints.py:16-31;
     note the source order is (lon, lat) and the reference swaps)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.nullif(F.regexp_extract(c, _WKT_POINT, 1), F.lit("")).cast("double")
+    return f"CAST(nullif(regexp_extract({col}, '{_WKT_POINT}', 1), '') AS DOUBLE)"
 
 
-def wkt_point_lat(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.nullif(F.regexp_extract(c, _WKT_POINT, 2), F.lit("")).cast("double")
+def wkt_point_lat(col: str) -> str:
+    return f"CAST(nullif(regexp_extract({col}, '{_WKT_POINT}', 2), '') AS DOUBLE)"
 
 
 # ---------------------------------------------------------------------------

@@ -1,7 +1,7 @@
 """The engine's partitioned-table format: parquet files in Hive-style
 ``col=value`` directories plus one manifest, ``_manifest.json``, that
 lists the table's live snapshot — its schema and, per file, the
-partition value, the row count and any tallies the writer asked for.
+partition value, the row count and any tallies the writer kept.
 The incidents sink and the IVF index are such tables.
 
 A write commits by renaming one file (SURVEY.md §7.4, upsert without
@@ -25,14 +25,13 @@ so a read neither lists the table dir nor infers a schema from footers.
 
 from __future__ import annotations
 
-import datetime
 import json
 import os
 import shutil
 import uuid
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -68,20 +67,14 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(schema).option("basePath", path).parquet(*files)
 
 
-def _dir_value(v) -> str:
-    """A partition value as Spark spells it in the directory name."""
+def dir_value(v) -> str:
+    """A partition value as Spark spells it in the directory name, and
+    as the manifest's ``value`` field holds it."""
     return "__HIVE_DEFAULT_PARTITION__" if v is None else str(v)
 
 
-def _sql_value(v) -> str:
-    """A partition value (a date or an int) as a Spark SQL literal."""
-    if v is None:
-        return "NULL"
-    return f"DATE'{v}'" if isinstance(v, datetime.date) else str(int(v))
-
-
 def replace_partitions(
-    rows: DataFrame, path: str, col: str, values: list | None = None, **tallies: str
+    rows: DataFrame, path: str, col: str, values: list | None = None, tallies: dict | None = None
 ) -> None:
     """Make ``rows`` the whole content of the ``col`` partitions
     ``values`` of the table at ``path`` — of the whole table when
@@ -93,37 +86,21 @@ def replace_partitions(
     files it replaces are deleted only after the commit.  A failed
     write commits nothing and leaves the table's files as they were.
 
-    Each tally ``name="<SQL condition>"`` stores ``count_if`` of the
-    condition over a value's rows on the file written for it, counted
-    by an ``observe`` on the write's own job; a whole-table write or an
-    append with tallies first collects the values ``rows`` holds.  The
-    counts are SQL strings because building them as Columns costs
-    ~0.4 s of driver time for 30 values and two tallies."""
+    ``tallies`` maps each written value, spelled as :func:`dir_value`
+    spells it, to counts the caller kept for its rows (e.g. ``{"pagar":
+    3}``); they ride the value's entry in the manifest."""
     old = _manifest(path)
     if values is None or old is None:
         kept = []
     else:
-        gone = {_dir_value(v) for v in values}
+        gone = {dir_value(v) for v in values}
         kept = [e for e in old["files"] if e["value"] not in gone]
-    if tallies and not values:
-        values = [r[0] for r in rows.select(col).distinct().collect()]
-    # In a fixed order, so a write of the same partitions as the last
-    # one reuses its generated code: ~0.4 s less per MERGE of 30
-    # partitions.
-    counts = [
-        F.expr(f"count_if({col} <=> {_sql_value(v)} AND ({cond})) AS `{name}|{_dir_value(v)}`")
-        for v in sorted(values or [], key=_dir_value)
-        for name, cond in tallies.items()
-    ]
-    obs = Observation()
     stage = os.path.join(path, f"_stage-{uuid.uuid4().hex}")
-    observed = rows.observe(obs, *counts) if counts else rows
     try:
-        observed.repartition(F.col(col)).write.partitionBy(col).parquet(stage)
+        rows.repartition(F.col(col)).write.partitionBy(col).parquet(stage)
     except BaseException:
         shutil.rmtree(stage, ignore_errors=True)
         raise
-    tally = obs.get if counts else {}
     added = []
     for d in sorted(os.listdir(stage)):
         if not d.startswith(f"{col}="):
@@ -140,7 +117,8 @@ def replace_partitions(
             }
             # a value's tallies ride its first file, so sums stay exact
             # if a session's maxRecordsPerFile splits it
-            added.append(entry | {n: tally[f"{n}|{value}"] if i == 0 else 0 for n in tallies})
+            counts = tallies[value] if tallies is not None else {}
+            added.append(entry | {n: c if i == 0 else 0 for n, c in counts.items()})
     schema = StructType([f for f in rows.schema if f.name != col] + [rows.schema[col]])
     manifest = {"schema": schema.jsonValue(), "files": kept + added}
     _publish(path, manifest)

@@ -68,7 +68,7 @@ def run_etl(
     # MERGE's one execution of the batch; their good neighbours land.
     feed_obs = Observation("feed_pages")
     raw = read_feed(spark, feed_dir, max_pages).observe(
-        feed_obs, F.count("_corrupt_record").alias("corrupt_records")
+        feed_obs, F.expr("count(_corrupt_record) AS corrupt_records")
     )
     inc = ingest(raw, county_dim, now)
     # schema enforcement at the write boundary: source drift becomes
@@ -81,14 +81,10 @@ def run_etl(
     # dashboard KPI below measures the PUBLISHED table instead, read
     # from the sink's manifest.
     obs = Observation("ingest_batch")
-    # coalesce inside the observe expression: SUM over an EMPTY batch
-    # is NULL (not 0), and int(None) would blow up the report below.
     updates = updates.observe(
         obs,
-        F.count(F.lit(1)).alias("batch_rows"),
-        F.coalesce(
-            F.sum(F.col("latitude").isNull().cast("long")), F.lit(0)
-        ).alias("batch_null_coords"),
+        F.expr("count(1) AS batch_rows"),
+        F.expr("count_if(latitude IS NULL) AS batch_null_coords"),
     )
     merge_into_incidents(spark, sink_path, updates)
     batch_metrics = obs.get if obs.get else {"batch_rows": 0, "batch_null_coords": 0}

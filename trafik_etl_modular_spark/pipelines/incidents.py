@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from trafik_etl_modular_spark.constants import UNKNOWN_COUNTY
 from trafik_etl_modular_spark.functions.scalars import derive_status
-from trafik_etl_modular_spark.queries.common import SQL_NOW, now_ts, t
+from trafik_etl_modular_spark.queries.common import SQL_NOW, t
 
 
 def build_incidents(spark: SparkSession, sf_dir: str, keep_expired: bool = False) -> DataFrame:
@@ -70,7 +70,7 @@ def build_incidents(spark: SparkSession, sf_dir: str, keep_expired: bool = False
     )
     inc = inc.withColumn(
         "status",
-        derive_status(F.col("start_time_utc"), F.col("end_time_utc"), now_ts()),
+        F.expr(derive_status("start_time_utc", "end_time_utc", SQL_NOW)),
     )
     if not keep_expired:
         # P3 — the reference drops expired rows during normalize

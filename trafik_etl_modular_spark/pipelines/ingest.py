@@ -41,7 +41,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, DataFrameReader, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamReader
 
 from trafik_etl_modular_spark.functions.scalars import (
@@ -97,24 +96,19 @@ def feed_to_flat(raw: DataFrame) -> DataFrame:
     trimmed text, and the reference's id-fallback rule
     (transform.py:62).  The one flat-row typing: the Python XML feed
     source and :func:`flatten_situations` (``run_etl``) both end here."""
-    return raw.select(
-        F.col("situation_id"),
-        parse_iso_utc("modified_time").alias("modified_time_utc"),
-        parse_iso_utc("publication_time").alias("publication_time_utc"),
-        F.coalesce(
-            F.col("deviation_id"),
-            F.concat_ws(":", F.col("situation_id"), F.col("start_time")),
-        ).alias("incident_id"),
-        F.trim(F.coalesce(F.col("message"), F.lit(""))).alias("message"),
-        F.trim(F.coalesce(F.col("message_type"), F.lit(""))).alias("message_type"),
-        F.trim(F.coalesce(F.col("location_descriptor"), F.lit(""))).alias(
-            "location_descriptor"
-        ),
-        F.trim(F.coalesce(F.col("road_number"), F.lit(""))).alias("road_number"),
-        F.col("county_no"),
-        parse_iso_utc("start_time").alias("start_time_utc"),
-        parse_iso_utc("end_time").alias("end_time_utc"),
-        F.col("wgs84").alias("geometry_wgs84"),
+    return raw.selectExpr(
+        "situation_id",
+        f"{parse_iso_utc('modified_time')} AS modified_time_utc",
+        f"{parse_iso_utc('publication_time')} AS publication_time_utc",
+        "coalesce(deviation_id, concat_ws(':', situation_id, start_time)) AS incident_id",
+        "trim(coalesce(message, '')) AS message",
+        "trim(coalesce(message_type, '')) AS message_type",
+        "trim(coalesce(location_descriptor, '')) AS location_descriptor",
+        "trim(coalesce(road_number, '')) AS road_number",
+        "county_no",
+        f"{parse_iso_utc('start_time')} AS start_time_utc",
+        f"{parse_iso_utc('end_time')} AS end_time_utc",
+        "wgs84 AS geometry_wgs84",
     )
 
 
@@ -124,7 +118,7 @@ def explode_situations(raw: DataFrame) -> DataFrame:
     deviation-less Situations vanish, matching both reference
     implementations, and so does the all-NULL row of a page that does
     not parse."""
-    return raw.select("*", F.explode("Deviation").alias("d")).selectExpr(
+    return raw.selectExpr("*", "explode(Deviation) AS d").selectExpr(
         "Id AS situation_id",
         "ModifiedTime AS modified_time",
         "PublicationTime AS publication_time",
@@ -152,44 +146,37 @@ def normalize_incidents(
 ) -> DataFrame:
     """Transform-layer normalize (reference transform.py:49-137):
     status derivation + drops + geo parse + dimension join + dedups +
-    canonical ordering columns."""
-    now_col = F.lit(now).cast("timestamp")
-
-    inc = (
-        flat
-        # P2 — drop empty messages (transform.py:58-59)
-        .filter(F.length(F.trim(F.col("message"))) > 0)
-        .withColumn(
-            "status",
-            derive_status(F.col("start_time_utc"), F.col("end_time_utc"), now_col),
-        )
-        # P3 — drop expired (status NULL)
-        .filter(F.col("status").isNotNull())
+    canonical ordering columns.  Each step is SQL text, so building the
+    plan costs a few py4j calls per step, not one per Column node."""
+    now_ts = f"CAST('{now}' AS TIMESTAMP)"
+    inc = flat.selectExpr(
+        "*",
+        f"{derive_status('start_time_utc', 'end_time_utc', now_ts)} AS status",
         # F4 — WKT POINT fast path (JVM regex); centroid of non-points
         # is the shapely pandas-UDF path, gated on availability
-        .withColumn("latitude", wkt_point_lat("geometry_wgs84"))
-        .withColumn("longitude", wkt_point_lon("geometry_wgs84"))
+        f"{wkt_point_lat('geometry_wgs84')} AS latitude",
+        f"{wkt_point_lon('geometry_wgs84')} AS longitude",
     )
+    # P2 — drop empty messages (transform.py:58-59); P3 — drop expired
+    # (status NULL)
+    inc = inc.filter("length(trim(message)) > 0 AND status IS NOT NULL")
 
     # J1 — broadcast dimension join for county_name.
-    dim = F.broadcast(county_dim.select("county_no", "county_name"))
-    inc = inc.drop("county_name") if "county_name" in inc.columns else inc
-    inc = inc.join(dim, "county_no", "left")
+    dim = county_dim.selectExpr("county_no", "county_name").hint("broadcast")
+    inc = inc.drop("county_name").join(dim, "county_no", "left")
 
     # W1 — composite-natural-key dedup with explicit recency order
     # (pandas relied on input order; SURVEY.md §7.4).
     inc = latest_wins(
         inc,
         ["message", "location_descriptor", "start_time_utc", "end_time_utc"],
-        [F.desc("modified_time_utc"), F.asc("incident_id")],
+        ["modified_time_utc DESC", "incident_id ASC"],
     )
     # W2 — latest-version-wins per incident_id.
-    inc = latest_wins(
-        inc, ["incident_id"], [F.desc("modified_time_utc"), F.desc("start_time_utc")]
-    )
+    inc = latest_wins(inc, ["incident_id"], ["modified_time_utc DESC", "start_time_utc DESC"])
     # O1 — canonical ordering exposed as a column (row order is not
     # meaningful in a distributed table; SURVEY.md §2.6 O1 note).
-    return inc.withColumn("status_rank", status_rank("status"))
+    return inc.selectExpr("*", f"{status_rank('status')} AS status_rank")
 
 
 def ingest(raw: DataFrame, county_dim: DataFrame, now: str) -> DataFrame:

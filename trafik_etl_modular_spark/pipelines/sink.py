@@ -10,47 +10,80 @@ Layout decisions (§7.1):
     key (small-file control, so no separate compaction job); on Delta
     this would be OPTIMIZE/Z-ORDER on `county_name` — parquet min/max
     stats give data skipping on sorted columns.
-  * upsert = partition-scoped rewrite of the partitions the updates
-    batch lands in plus those holding older versions of its keys
-    (union + latest-wins within those), not the whole table — the
-    pure-parquet equivalent of Delta `MERGE INTO`, with rewrite
-    volume ∝ touched partitions, one row per key and one execution
-    of the batch.
+  * upsert = the reference's keyed `ON CONFLICT(incident_id) DO
+    UPDATE`: the driver picks each batch key's winner, then rewrites
+    only the partitions the winners land in or leave (a filter on the
+    replaced keys and a union with the batch; no window), not the
+    whole table — rewrite volume ∝ touched partitions, one row per
+    key, one execution of the batch.
   * every write commits one manifest (`operators.table`), so a reader
-    sees the whole MERGE or none of it.  Each file's entry also
-    counts its rows by status, so the ETL report sums the manifest
-    instead of scanning the table.
+    sees the whole MERGE or none of it.  Each entry also counts its
+    rows by status (kept by arithmetic in the MERGE), so the ETL
+    report sums the manifest instead of scanning the table.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from trafik_etl_modular_spark.operators.table import read_table, replace_partitions, table_files
-from trafik_etl_modular_spark.queries.dedup import latest_wins
+from trafik_etl_modular_spark.constants import STATUS_ONGOING, STATUS_UPCOMING
+from trafik_etl_modular_spark.operators.table import (
+    dir_value, read_table, replace_partitions, table_files,
+)
+
+# The report's per-status counts, kept on the manifest entries of a
+# table that has a `status` column.
+_TALLIES = {"pagar": STATUS_ONGOING, "kommande": STATUS_UPCOMING}
 
 
-def _status_tallies(df: DataFrame) -> dict[str, str]:
-    """The report's per-status counts, kept on each manifest entry of a
-    table that has a `status` column."""
-    if "status" not in df.columns:
-        return {}
-    return {"pagar": "status = 'PÅGÅR'", "kommande": "status = 'KOMMANDE'"}
+def _count(tallies: dict, row: dict, n: int) -> None:
+    """Add ``n`` rows like ``row`` to the status counts of its partition."""
+    t = tallies.setdefault(dir_value(row["event_date"]), dict.fromkeys(_TALLIES, 0))
+    for name, status in _TALLIES.items():
+        t[name] += n * (row.get("status") == status)
+
+
+def _sql(v) -> str:
+    """A key or a partition date as a Spark SQL literal."""
+    return "NULL" if v is None else "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _in(key: str, keys) -> str:
+    """SQL text: ``key`` is one of ``keys`` — false, not NULL, for a
+    NULL key, so ``NOT`` keeps that row as an anti-join would.  Spark
+    plans the list as a hash set (``INSET``) inside the filter."""
+    return f"coalesce(`{key}` IN ({', '.join(map(_sql, keys))}), false)"
 
 
 def write_incidents(df: DataFrame, path: str) -> None:
     """Initial load: replace the table with `df`, date-partitioned,
     one file per date."""
     rows = df.withColumn("event_date", F.to_date("start_time_utc"))
-    replace_partitions(rows, path, "event_date", None, **_status_tallies(rows))
+    tallies = {}
+    if "status" in rows.columns:
+        for r in rows.groupBy("event_date", "status").count().collect():
+            _count(tallies, r.asDict(), r["count"])
+    replace_partitions(rows, path, "event_date", None, tallies or None)
 
 
 def read_incidents(spark: SparkSession, path: str) -> DataFrame:
     """The committed snapshot; starts no Spark job."""
     return read_table(spark, path)
+
+
+def _batch_wins(new: dict, old: dict, order_cols: tuple[str, ...]) -> bool:
+    """Whether the batch row comes first in latest-wins order: each of
+    ``order_cols`` descending, NULLs last, then the batch before the
+    table (so a tie, or NULL on both sides, goes to the batch)."""
+    for c in order_cols:
+        n, o = new[c], old[c]
+        if n != o:
+            return n is not None and (o is None or n > o)
+    return True
 
 
 def merge_into_incidents(
@@ -60,43 +93,69 @@ def merge_into_incidents(
     key: str = "incident_id",
     order_cols: tuple[str, ...] = ("modified_time_utc",),
 ) -> None:
-    """Partition-scoped MERGE: rewrite only the event_date partitions
-    the updates touch.
+    """Partition-scoped MERGE, decided on the batch's keys.
 
-    1. materialize the tagged batch once: every later step reads that
-       copy, so the upstream plan (feed source, normalize) runs once;
-    2. collect the rewrite set, a tiny distinct list: the partitions
-       the batch lands in, plus those whose rows share a batch key
-       (semi-join on the table's `(key, event_date)` projection) — a
-       new version that moved to another day must replace its old
-       row there, or the table holds the key twice;
-    3. read ONLY those partitions (partition pruning via the filter);
-    4. union + latest-wins on the key;
-    5. ``replace_partitions`` the rewrite set with the result, lazily
-       (the write reads the files it replaces; they are deleted only
-       after the commit).  A rewrite-set partition whose keys all
-       moved to another day gets no rows and leaves the table.  The
-       commit is one manifest rename: a crash before it leaves the
-       previous snapshot, a crash after it the new one.
+    1. materialize the batch once, so the upstream plan (feed source,
+       normalize) runs once; its ``Observation`` brings the batch's
+       ``(key, event_date, order_cols, status)`` to the driver.  The
+       batch must hold one row per key, none NULL, else ``ValueError``
+       before anything is written;
+    2. one query brings the same columns of the table rows that hold a
+       batch key, from every partition (a key may have moved to another
+       day): O(batch keys) rows on the driver, never the table;
+    3. the batch wins where latest-wins order puts it first; a losing
+       batch row is stale.  The touched partitions are the winners'
+       dates plus those of the rows they replace;
+    4. ``replace_partitions`` the touched partitions with their rows
+       minus the replaced keys, union the batch minus the stale keys:
+       one shuffle (the write's).  Their status counts are the old
+       entries' minus the replaced rows' plus the winners'.
+
+    Each key set is a SQL ``IN`` list, planned as a hash set inside a
+    filter: a join with a broadcast relation would cost a Spark job.
     """
-    upd = (
-        updates.withColumn("event_date", F.to_date("start_time_utc"))
-        .withColumn("__src", F.lit(1))
-        .localCheckpoint(eager=True)
-    )
-    # A table with nothing committed merges like an empty one.
-    table = read_incidents(spark, path) if table_files(path) else upd.limit(0)
-    held = table.join(F.broadcast(upd.select(key)), key, "left_semi")
-    dates = upd.select("event_date").union(held.select("event_date"))
-    touched = [r[0] for r in dates.distinct().collect()]
+    rows = updates.withColumn("event_date", F.to_date("start_time_utc"))
+    tallied = "status" in rows.columns
+    cols = [key, "event_date", *order_cols, *(["status"] if tallied else [])]
+    seen = Observation()
+    fields = ", ".join(f"`{c}`" for c in cols)
+    upd = rows.observe(seen, F.expr(f"collect_list(struct({fields})) AS rows"))
+    upd = upd.localCheckpoint(eager=True)
+    batch = [r.asDict() for r in seen.get.get("rows") or []]
+    new = {r[key]: r for r in batch}
+    if None in new or len(new) < len(batch):
+        raise ValueError(f"a MERGE batch needs one row per non-NULL {key}")
+    files = table_files(path)
+    table = read_incidents(spark, path) if files else None
+    old = {}
+    if table is not None and new:
+        held = table.filter(_in(key, new)).select(*cols)
+        old = {r[key]: r.asDict() for r in held.collect()}
+
+    touched, replaced, stale, tallies = set(), [], [], {}
+    for k, n in new.items():
+        o = old.get(k)
+        if o is not None and not _batch_wins(n, o, order_cols):
+            stale.append(k)
+            continue
+        touched.add(n["event_date"])
+        _count(tallies, n, 1)
+        if o is not None:
+            replaced.append(k)
+            touched.add(o["event_date"])
+            _count(tallies, o, -1)
     if not touched:
         return
-
-    existing = table.filter(F.col("event_date").isin(touched)).withColumn("__src", F.lit(0))
-    merged = existing.unionByName(upd, allowMissingColumns=True)
-    ordering = [F.desc(c) for c in order_cols] + [F.desc("__src")]
-    resolved = latest_wins(merged, [key], ordering).drop("__src")
-    replace_partitions(resolved, path, "event_date", touched, **_status_tallies(resolved))
+    for e in files:  # plus the counts the touched partitions held
+        if e["value"] in tallies:
+            for name in _TALLIES:
+                tallies[e["value"]][name] += e.get(name, 0)
+    rows = upd.filter(f"NOT {_in(key, stale)}") if stale else upd
+    if table is not None:
+        kept = table.filter(" OR ".join(f"event_date <=> {_sql(d)}" for d in touched))
+        kept = kept.filter(f"NOT {_in(key, replaced)}") if replaced else kept
+        rows = kept.unionByName(rows, allowMissingColumns=True)
+    replace_partitions(rows, path, "event_date", list(touched), tallies if tallied else None)
 
 
 def conform_schema(df: DataFrame, ddl: str) -> DataFrame:
@@ -104,7 +163,7 @@ def conform_schema(df: DataFrame, ddl: str) -> DataFrame:
     load_sqlite.py:79-87: missing columns added as NULL, numerics
     coerced with errors='coerce', extras implicitly dropped).
 
-    Spark form: project onto the target schema —
+    Spark form: one projection onto the target schema —
       * missing column → typed NULL,
       * present column → `try_cast` (bad values → NULL, matching
         pandas errors='coerce' under ANSI mode — Spark 4 default —
@@ -116,19 +175,13 @@ def conform_schema(df: DataFrame, ddl: str) -> DataFrame:
     surfaces as NULL counts, which the ETL report's anomaly band
     catches (etl_job.run_etl).
     """
-    from pyspark.sql.types import StructType
-
-    target = StructType.fromDDL(ddl)
-    cols = []
     have = {f.lower() for f in df.columns}
-    for field in target.fields:
-        if field.name.lower() in have:
-            cols.append(
-                F.col(field.name).try_cast(field.dataType).alias(field.name)
-            )
-        else:
-            cols.append(F.lit(None).cast(field.dataType).alias(field.name))
-    return df.select(*cols)
+    cols = []
+    for f in StructType.fromDDL(ddl).fields:
+        t = f.dataType.simpleString()
+        src = f"try_cast(`{f.name}` AS {t})" if f.name.lower() in have else f"CAST(NULL AS {t})"
+        cols.append(f"{src} AS `{f.name}`")
+    return df.selectExpr(*cols)
 
 
 def export_training_shards(

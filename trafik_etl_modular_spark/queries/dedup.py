@@ -26,15 +26,15 @@ from trafik_etl_modular_spark.registry import query
 # ---------------------------------------------------------------------------
 
 
-def latest_wins(df: DataFrame, keys: list[str], order: list) -> DataFrame:
-    """Keep exactly one row per key — the first under `order` (which
-    must be a total order for determinism). One hash shuffle on the
-    keys; row_number cuts within partitions, so memory is bounded by
-    the per-key group, not the table."""
-    w = Window.partitionBy(*keys).orderBy(*order)
-    return (
-        df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
-    )
+def latest_wins(df: DataFrame, keys: list[str], order: list[str]) -> DataFrame:
+    """Keep exactly one row per key — the first under `order`, SQL
+    ORDER BY items such as ``"ts DESC"`` (which must make a total order
+    for determinism). One hash shuffle on the keys; row_number cuts
+    within partitions, so memory is bounded by the per-key group, not
+    the table."""
+    part = ", ".join(f"`{k}`" for k in keys)
+    rn = f"row_number() OVER (PARTITION BY {part} ORDER BY {', '.join(order)}) AS __rn"
+    return df.selectExpr("*", rn).filter("__rn = 1").drop("__rn")
 
 
 # ---------------------------------------------------------------------------
@@ -62,7 +62,7 @@ def dedup_latest_wins(spark, sf_dir):
     version chains from the fixture."""
     ev = t(spark, sf_dir, "events").withColumn("entity_id", F.col("event_id") % 700)
     return latest_wins(
-        ev, ["entity_id"], [F.desc("ts"), F.desc("event_id")]
+        ev, ["entity_id"], ["ts DESC", "event_id DESC"]
     ).select("entity_id", "event_id", "ts", "value")
 
 
@@ -247,7 +247,7 @@ def dedup_composite_key(spark, sf_dir):
     recency tiebreak replacing pandas' input-order dependence."""
     ev = t(spark, sf_dir, "events")
     return latest_wins(
-        ev, ["user_id", "event_type"], [F.desc("ts"), F.desc("event_id")]
+        ev, ["user_id", "event_type"], ["ts DESC", "event_id DESC"]
     ).select("user_id", "event_type", "event_id", "ts")
 
 
@@ -285,7 +285,7 @@ def merge_upsert(base: DataFrame, updates: DataFrame, key_cols: list[str]) -> Da
     tagged = base.withColumn("__src", F.lit(0)).unionByName(
         updates.withColumn("__src", F.lit(1))
     )
-    return latest_wins(tagged, key_cols, [F.desc("__src")]).drop("__src")
+    return latest_wins(tagged, key_cols, ["__src DESC"]).drop("__src")
 
 
 _MERGE_SQL = """

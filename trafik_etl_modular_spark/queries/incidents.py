@@ -222,7 +222,7 @@ def inc_status_rank(spark, sf_dir):
         inc.select(
             "incident_id",
             "status",
-            status_rank("status").alias("status_rank"),
+            F.expr(status_rank("status")).alias("status_rank"),
             "modified_time_utc",
         )
         .orderBy(F.asc("status_rank"), F.desc("modified_time_utc"), F.asc("incident_id"))

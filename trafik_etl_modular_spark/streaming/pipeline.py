@@ -634,7 +634,7 @@ def upsert_sink_run(
         # the idempotent at-least-once semantics the reference's keyed
         # upsert provides across overlapping daily re-fetches.
         state["table"] = latest_wins(
-            merged, ["entity_id"], [F.desc("ts"), F.desc("event_id")]
+            merged, ["entity_id"], ["ts DESC", "event_id DESC"]
         ).localCheckpoint(eager=True)
 
     writer = read_events_stream(spark, sf_dir).writeStream.foreachBatch(apply_batch)
